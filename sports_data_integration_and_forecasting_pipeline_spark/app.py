@@ -20,7 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.markets import detect_arbitrage, find_best_odds_window
+from .operators.markets import _best_with_margin
 from .operators.odds import clean_odds
 from .sources.odds_api import fetch_player_props
 from .sources.readers import games_from_json_strings, read_odds_json
@@ -65,27 +65,16 @@ def app_summary(cleaned: DataFrame) -> DataFrame:
     ``detect_discrepancies`` this keeps games with ≠ 2 outcomes, exactly
     as the app table does.
 
-    Scale: one window argmax + one same-key margin aggregation joined
-    back — both shuffles share the game_id key."""
-    best = find_best_odds_window(cleaned).select(
+    Scale: the argmax and the margin are two windows over one
+    ``game_id`` shuffle, no join (``markets._best_with_margin``)."""
+    return _best_with_margin(cleaned).select(
         "game_id",
         "home_team",
         "away_team",
         "outcome",
         F.col("price").alias("best_price"),
         F.col("bookmaker").alias("best_bookmaker"),
-    )
-    margins = detect_arbitrage(best, "game_id", price_col="best_price").select(
-        "game_id", F.col("arbitrage_margin").alias("arbitrage_margin_pct")
-    )
-    return best.join(margins, "game_id", "left").select(
-        "game_id",
-        "home_team",
-        "away_team",
-        "outcome",
-        "best_price",
-        "best_bookmaker",
-        "arbitrage_margin_pct",
+        F.col("arbitrage_margin").alias("arbitrage_margin_pct"),
     )
 
 

@@ -5,24 +5,30 @@ The reference computes these with per-group Python loops and ``idxmax``
 
 - best price per ``(game_id, outcome)`` is ``max_by`` over a struct with an
   explicit tiebreak — a single partial-aggregating shuffle, no window sort;
-- the arbitrage margin is a second aggregation over ``game_id`` joined back
-  to the per-outcome rows.
+- the arbitrage margin, and every other per-game total repeated on the
+  per-outcome rows, is a window over ``game_id`` on top of the argmax
+  window.
 
 Tie policy: the reference's ``idxmax`` keeps the first-encountered row —
 input-order-dependent, which is nondeterministic under distributed scans.
 We pin a deterministic tiebreak instead: highest price, then lowest
 bookmaker name (SURVEY §4.3-4 documents the divergence).
 
-Scale note: both aggregations and the join key on ``game_id``; with AQE
-the join of per-outcome best rows to the per-game margin table is planned
-as a broadcast when one side is small, and the two groupBys are map-side
-partial-aggregated.
+Scale note: :func:`detect_discrepancies`, :func:`best_odds_report` and
+``app.app_summary`` share :func:`_best_with_game_totals`: one
+``repartition("game_id")`` feeds both windows (hash on ``game_id`` also
+clusters every ``(game_id, outcome)`` group), so each plan holds one scan,
+one exchange and no join. A join of the argmax rows to a per-game
+aggregate of themselves would plan the scan, the flatten and the argmax
+twice, because the two sides project different columns and AQE cannot
+reuse the exchange.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def find_best_odds(
@@ -71,8 +77,6 @@ def find_best_odds_window(
     """Window-based variant of :func:`find_best_odds` with exact
     (price desc, bookmaker asc) tie policy — used when alphabetical
     determinism must hold for oracle hashing."""
-    from pyspark.sql.window import Window
-
     group_cols = group_cols or ["game_id", "outcome"]
     w = Window.partitionBy(*group_cols).orderBy(
         F.desc("price"), F.asc("bookmaker")
@@ -102,47 +106,66 @@ def detect_arbitrage(
     )
     return agg.withColumn(
         "arbitrage_margin",
-        F.when(
-            (F.col("n_outcomes") == 2) & (F.col("total_implied") < 1.0),
-            F.round((1.0 - F.col("total_implied")) * 100.0, 2),
-        ),
+        _arb_margin(F.col("n_outcomes"), F.col("total_implied")),
+    )
+
+
+def _arb_margin(n_outcomes, total_implied):
+    """``round((1 − Σ 1/price)·100, 2)`` iff exactly 2 outcomes and
+    ``Σ < 1`` strictly, else null (SURVEY §4.3-3)."""
+    return F.when(
+        (n_outcomes == 2) & (total_implied < 1.0),
+        F.round((1.0 - total_implied) * 100.0, 2),
+    )
+
+
+def _best_with_game_totals(df: DataFrame, **totals) -> DataFrame:
+    """Best row per ``(game_id, outcome)`` (:func:`find_best_odds_window`)
+    plus one column per ``totals`` entry (name → aggregate over the game's
+    best rows), evaluated over a ``game_id`` window.
+
+    Totals are NULL on rows with a NULL ``game_id``: a NULL key names no
+    game, just as an equi-join on ``game_id`` matches no row to it.
+    """
+    w = Window.partitionBy("game_id")
+    has_game = F.col("game_id").isNotNull()
+    return find_best_odds_window(df.repartition("game_id")).select(
+        "*", *[F.when(has_game, agg.over(w)).alias(k) for k, agg in totals.items()]
+    )
+
+
+def _best_with_margin(df: DataFrame) -> DataFrame:
+    """:func:`_best_with_game_totals` with the game's outcome count ``_n``
+    and its ``arbitrage_margin`` over the best prices."""
+    best = _best_with_game_totals(
+        df, _n=F.count(F.lit(1)), _total=F.sum(F.lit(1.0) / F.col("price"))
+    )
+    return best.withColumn(
+        "arbitrage_margin", _arb_margin(F.col("_n"), F.col("_total"))
     )
 
 
 def detect_discrepancies(df: DataFrame, market_key: str = "h2h") -> DataFrame:
     """Full arb scan (A7; reference ``src/analysis.py:55-96``): filter
-    market → best price per (game, outcome) → margin per game → join back.
+    market → best price per (game, outcome) → margin per game, repeated on
+    each of the game's rows.
 
     Output columns mirror the reference's result rows
     (``analysis.py:84-94``): ``game_id, home_team, away_team, market,
     outcome, best_bookmaker, best_price, implied_prob, arbitrage_margin``.
     Games with ≠ 2 distinct outcomes are dropped (``analysis.py:73-74``).
     """
-    filtered = df.filter(F.col("market") == market_key)
-    best = find_best_odds_window(filtered).select(
+    best = _best_with_margin(df.filter(F.col("market") == market_key))
+    return best.filter(F.col("_n") == 2).select(
         "game_id",
         "home_team",
         "away_team",
+        F.lit(market_key).alias("market"),
         "outcome",
         F.col("bookmaker").alias("best_bookmaker"),
         F.col("price").alias("best_price"),
         (F.lit(1.0) / F.col("price")).alias("implied_prob"),
-    )
-    margins = detect_arbitrage(best, "game_id", price_col="best_price")
-    return (
-        best.join(margins, "game_id", "inner")
-        .filter(F.col("n_outcomes") == 2)
-        .select(
-            "game_id",
-            "home_team",
-            "away_team",
-            F.lit(market_key).alias("market"),
-            "outcome",
-            "best_bookmaker",
-            "best_price",
-            "implied_prob",
-            "arbitrage_margin",
-        )
+        "arbitrage_margin",
     )
 
 
@@ -176,10 +199,7 @@ def build_summary(cleaned: DataFrame) -> DataFrame:
         F.map_keys("best_prices").alias("outcomes"),
         "best_prices",
         "best_bookmakers",
-        F.when(
-            (F.col("_n") == 2) & (F.col("_total") < 1.0),
-            F.round((1.0 - F.col("_total")) * 100.0, 2),
-        ).alias("arbitrage_margin_pct"),
+        _arb_margin(F.col("_n"), F.col("_total")).alias("arbitrage_margin_pct"),
     )
 
 
@@ -188,11 +208,14 @@ def best_odds_report(cleaned: DataFrame) -> DataFrame:
     ``notebooks/player_prop_demo.ipynb`` cell 6): per-outcome best rows
     left-joined with a per-game summary
     (``sum_best_implied`` + comma-joined sorted distinct outcomes)."""
-    best = find_best_odds_window(cleaned)
-    summary = best.groupBy("game_id").agg(
-        F.sum("implied_prob").alias("sum_best_implied"),
-        F.array_join(F.array_sort(F.collect_set("outcome")), ", ").alias(
-            "outcomes"
-        ),
+    best = _best_with_game_totals(
+        cleaned,
+        sum_best_implied=F.sum("implied_prob"),
+        _outcomes=F.collect_set("outcome"),
     )
-    return best.join(summary, "game_id", "left")
+    return best.select(
+        "game_id",
+        *[c for c in cleaned.columns if c != "game_id"],
+        "sum_best_implied",
+        F.array_join(F.array_sort("_outcomes"), ", ").alias("outcomes"),
+    )

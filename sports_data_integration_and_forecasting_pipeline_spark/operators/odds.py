@@ -6,15 +6,19 @@ replaces the reference's ``groupby(...).transform`` round-trips
 with a single shuffle on the group key, no Python boundary.
 
 Scale note: a devig partition is one betting market (a handful of rows), so
-the window state is tiny and the shuffle is the only cost; both devig
-windows share the same partitioning key, so Catalyst reuses one Exchange
-for the chained windows in :func:`add_true_probabilities`.
+the window state is tiny and the shuffle is the only cost. Each group sum
+is materialized once as a temporary column before the ``when`` that reads
+it twice; written inline, Catalyst would evaluate the same windowed sum
+twice in one ``Window`` node. :func:`odds_to_probs` is one ``Window`` node
+with one sum; :func:`add_true_probabilities` chains two, one sum each, over
+the same partitioning key, so they share one Exchange.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import FloatType, NumericType
 from pyspark.sql.window import Window
 
 from ..functions.odds_math import (
@@ -41,20 +45,27 @@ def odds_to_probs(
     if price_col not in df.columns:
         raise ValueError(f"price column '{price_col}' not found in DataFrame")
 
-    price = coerce_numeric(F.col(price_col))
+    # A numeric price (``flatten_odds_to_df`` already yields doubles) needs
+    # no string round trip; floats keep it so 1.1f reads as 1.1, not
+    # 1.100000023841858.
+    dtype = df.schema[price_col].dataType
+    if isinstance(dtype, NumericType) and not isinstance(dtype, FloatType):
+        price = F.col(price_col).cast("double")
+    else:
+        price = coerce_numeric(F.col(price_col))
     out = (
         df.withColumn(price_col, price)
         .withColumn("decimal_odds", to_decimal_odds(F.col(price_col)))
         .withColumn("implied_prob", implied_prob(F.col("decimal_odds")))
+        .withColumn("_total", F.sum("implied_prob").over(Window.partitionBy(market_col)))
     )
-    w = Window.partitionBy(market_col)
-    total = F.sum("implied_prob").over(w)
+    total = F.col("_total")
     return out.withColumn(
         "devig_prob",
         F.when(total <= 0, F.col("implied_prob")).otherwise(
             F.col("implied_prob") / total
         ),
-    )
+    ).drop("_total")
 
 
 def clean_odds(games: DataFrame, market: str = "h2h") -> DataFrame:
@@ -95,15 +106,18 @@ def add_true_probabilities(
     ``true_prob = t / Σt`` (pass-through ``p1`` when ``Σt <= 0``).
     """
     w = Window.partitionBy(group_col)
-    total = F.sum("implied_prob").over(w)
+    total = F.col("_total")
     p1 = F.when(total > 0, F.col("implied_prob") / total).otherwise(
         F.col("implied_prob")
     )
-    out = df.withColumn("_p1", p1).withColumn(
-        "_adj", F.pow(F.col("_p1"), 1.0 / power)
+    out = (
+        df.withColumn("_total", F.sum("implied_prob").over(w))
+        .withColumn("_p1", p1)
+        .withColumn("_adj", F.pow(F.col("_p1"), 1.0 / power))
+        .withColumn("_adj_total", F.sum("_adj").over(w))
     )
-    adj_total = F.sum("_adj").over(w)
+    adj_total = F.col("_adj_total")
     return out.withColumn(
         "true_prob",
         F.when(adj_total > 0, F.col("_adj") / adj_total).otherwise(F.col("_p1")),
-    ).drop("_p1", "_adj")
+    ).drop("_total", "_p1", "_adj", "_adj_total")

@@ -9,7 +9,7 @@ of history prunable.
 
 from __future__ import annotations
 
-import time
+from datetime import datetime
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -20,10 +20,16 @@ def save_snapshot(
     df: DataFrame, markets: str, out_dir: str | Path = "data", fmt: str = "parquet"
 ) -> str:
     """S5 timestamped snapshot write (reference ``src/ingestion.py:121-130``
-    wrote ``odds_{markets}_{ts}.csv``); parquet by default, CSV for parity."""
-    stamp = time.strftime("%Y%m%d_%H%M%S")
+    wrote ``odds_{markets}_{ts}.csv``); parquet by default, CSV for parity.
+
+    The name carries the time to the microsecond
+    (``odds_{markets}_YYYYmmdd_HHMMSS_ffffff``), so two polls in the same
+    second get two snapshots and names sort in write order. The write
+    never replaces an existing snapshot: a name that is already taken
+    raises instead."""
+    stamp = datetime.now().strftime("%Y%m%d_%H%M%S_%f")
     path = str(Path(out_dir) / f"odds_{markets}_{stamp}.{fmt}")
-    writer = df.write.mode("overwrite")
+    writer = df.write.mode("errorifexists")
     if fmt == "csv":
         writer.option("header", "true").csv(path)
     else:

@@ -298,3 +298,50 @@ def test_recover_canonical_clears_wedged_unpointed_version(spark, tmp_path):
     compact_canonical(spark, path)
     assert _pointer(Path(path)) == ("v00000002", "parquet")
     assert _rows(spark, path) == before
+
+
+def test_save_snapshot_keeps_two_polls_in_one_second(spark, tmp_path):
+    """Two snapshots written within the same wall-clock second both
+    survive under their own names."""
+    import time
+
+    from sports_data_integration_and_forecasting_pipeline_spark.sinks import save_snapshot
+
+    two, one = _batch(spark), _batch(spark).limit(1)
+    for attempt in range(20):  # retry until both writes share one second
+        out = tmp_path / str(attempt)
+        time.sleep(1 - time.time() % 1)  # start at the top of a second
+        t0 = time.time()
+        first = save_snapshot(two, "h2h", out)
+        second = save_snapshot(one, "h2h", out)
+        if int(time.time()) == int(t0):
+            break
+    else:
+        raise AssertionError("no two writes within one second")
+    assert first != second
+    assert sorted(p.name for p in out.iterdir()) == [Path(first).name, Path(second).name]
+    assert spark.read.parquet(first).count() == 2
+    assert spark.read.parquet(second).count() == 1
+
+
+def test_save_snapshot_never_replaces_a_snapshot(spark, tmp_path, monkeypatch):
+    """A snapshot name that is already taken raises; the snapshot on disk
+    keeps its rows."""
+    from datetime import datetime
+
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from sports_data_integration_and_forecasting_pipeline_spark import sinks
+
+    class _FrozenClock:
+        @staticmethod
+        def now():
+            return datetime(2025, 1, 1, 12, 0, 0, 250_000)
+
+    monkeypatch.setattr(sinks, "datetime", _FrozenClock)
+    path = sinks.save_snapshot(_batch(spark), "h2h", tmp_path)
+    assert Path(path).name == "odds_h2h_20250101_120000_250000.parquet"
+    with pytest.raises(AnalysisException):
+        sinks.save_snapshot(_batch(spark).limit(1), "h2h", tmp_path)
+    assert spark.read.parquet(path).count() == 2

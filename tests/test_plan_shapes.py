@@ -12,7 +12,17 @@ from __future__ import annotations
 
 import pytest
 
+from sports_data_integration_and_forecasting_pipeline_spark.app import app_summary
+from sports_data_integration_and_forecasting_pipeline_spark.operators.markets import (
+    detect_discrepancies,
+)
+from sports_data_integration_and_forecasting_pipeline_spark.operators.odds import clean_odds
 from sports_data_integration_and_forecasting_pipeline_spark.plans.battery import QUERIES
+from sports_data_integration_and_forecasting_pipeline_spark.sources.readers import (
+    read_odds_json,
+)
+
+from .conftest import SAMPLE_ODDS_JSON
 
 SF = "/root/testdata/sf0.001"
 
@@ -847,3 +857,19 @@ def test_column_pruning_reaches_scan(spark):
         assert schemas, f"{name}: no ReadSchema in plan"
         got = {f.split(":")[0] for s in schemas for f in s.split(",") if f}
         assert got == want, f"{name}: scan reads {sorted(got)}, want {sorted(want)}"
+
+
+@pytest.mark.parametrize(
+    "report", [detect_discrepancies, app_summary], ids=lambda f: f.__name__
+)
+def test_market_reports_scan_once_without_join(spark, report):
+    """The argmax rows and their per-game margin come from one scan and
+    one ``game_id`` shuffle. A join of the argmax rows to a per-game
+    aggregate of themselves plans the JSON scan and flatten twice, two
+    argmax shuffles, a per-game aggregate shuffle and a broadcast."""
+    df = report(clean_odds(read_odds_json(spark, str(SAMPLE_ODDS_JSON)), "h2h"))
+    df.collect()
+    plan = _strip_initial_plans(df._jdf.queryExecution().executedPlan().toString())
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("Exchange") - plan.count("ReusedExchange") <= 1, plan
+    assert "Join" not in plan, plan

@@ -56,30 +56,23 @@ def test_novelty_e6_degrades_to_null_past_bound(spark):
     assert by_input[(b + 5, b - 1)] == 1_000_000 * (b - 1) // (b + 5)
 
 
-def test_connected_components_checkpoints_edge_list(spark, monkeypatch):
-    """r15 sf1-sweep finding: min-label propagation joins the
-    symmetrized edge list on EVERY round, and an un-materialized edge
-    list re-executes its entire upstream pair-generation pipeline per
-    round (~1 s at sf0.1, ~a minute PER ROUND at sf1 — the
-    dedup_cluster_assign stall). Pin that `sym` (columns n, m) is
-    localCheckpoint'd before the loop, like connected_components_star
-    already does for its canonical pair list."""
-    # patch the CONCRETE class: in Spark 4 pyspark.sql.DataFrame is the
-    # abstract API base and instances are classic.dataframe.DataFrame
-    from pyspark.sql.classic.dataframe import DataFrame
+def test_connected_components_materializes_edge_list_once(spark, monkeypatch):
+    """Min-label propagation joins the symmetrized edge list on EVERY
+    round; an un-materialized edge list re-executes its entire upstream
+    pair-generation pipeline per round (~1 s at sf0.1, ~a minute PER
+    ROUND at sf1). Pin the contract, not the mechanism: the edge list
+    (columns n, m) is materialized exactly once, before the loop, under
+    the scoped-persist role ``cc_sym``."""
+    from sports_data_integration_and_forecasting_pipeline_spark.operators import dedup
 
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        connected_components,
-    )
+    persisted: list[tuple[str, tuple[str, ...]]] = []
+    orig = dedup._persist_scoped
 
-    checkpointed: list[tuple[str, ...]] = []
-    orig = DataFrame.localCheckpoint
+    def recording(role, df):
+        persisted.append((role, tuple(df.columns)))
+        return orig(role, df)
 
-    def counting(self, *args, **kwargs):
-        checkpointed.append(tuple(self.columns))
-        return orig(self, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    monkeypatch.setattr(dedup, "_persist_scoped", recording)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
@@ -87,10 +80,11 @@ def test_connected_components_checkpoints_edge_list(spark, monkeypatch):
         [(i,) for i in (1, 2, 3, 10, 11, 99)], "doc_id long"
     )
     out = {
-        r.doc_id: r.cluster_id for r in connected_components(edges, nodes).collect()
+        r.doc_id: r.cluster_id
+        for r in dedup.connected_components(edges, nodes).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
-    assert ("n", "m") in checkpointed, checkpointed
+    assert [c for r, c in persisted if r == "cc_sym"] == [("n", "m")], persisted
 
 
 def test_oracle_mirrors_novelty_bound():
