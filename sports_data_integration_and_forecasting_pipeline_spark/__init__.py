@@ -50,7 +50,6 @@ from .operators.similarity import (
     ann_lsh_topk,
     ivf_ann_topk,
     cosine_dup_pairs,
-    cosine_dup_pairs_blocked,
     semantic_dedup_pairs,
     semantic_dedup_keep,
 )
@@ -108,7 +107,6 @@ from .operators.contamination import (
 )
 from .operators.dedup import (
     clip_substring_spans,
-    connected_components_star,
     duplicate_substring_spans,
     incremental_duplicate_spans,
     shingle_rows,
@@ -249,7 +247,6 @@ __all__ = [
     "ann_lsh_topk",
     "ivf_ann_topk",
     "cosine_dup_pairs",
-    "cosine_dup_pairs_blocked",
     "semantic_dedup_pairs",
     "semantic_dedup_keep",
     # text analysis
@@ -282,7 +279,6 @@ __all__ = [
     "kfold_assign",
     "repetition_stats",
     "inverted_index",
-    "connected_components_star",
     # sketches / frequency
     "countmin_sketch",
     "countmin_estimate",

@@ -56,14 +56,16 @@ SIMHASH_BAND_BITS = 15  # 4 bands x 15 bits -> 32768 bucket values/band
 # second concurrent SparkSession (or thread) never unpersists a DataFrame
 # still backing another session's unevaluated result. Mutation is
 # lock-guarded; the registry is keyed by the owning SparkSession's id so
-# stopped sessions' entries can't collide with a successor's.
+# stopped sessions' entries can't collide with a successor's. Battery plans
+# and other operator modules share this registry (the house persist
+# pattern).
 import threading
 
 _ACTIVE_CACHE: dict[tuple[int, str], DataFrame] = {}
 _CACHE_LOCK = threading.Lock()
 
 
-def _persist_scoped(role: str, df: DataFrame) -> DataFrame:
+def persist_scoped(role: str, df: DataFrame) -> DataFrame:
     key = (id(df.sparkSession), role)
     with _CACHE_LOCK:
         prev = _ACTIVE_CACHE.get(key)
@@ -78,11 +80,6 @@ def _persist_scoped(role: str, df: DataFrame) -> DataFrame:
         out = df.persist()
         _ACTIVE_CACHE[key] = out
     return out
-
-
-# Public name: battery plans and other operator modules reuse the same
-# bounded one-cache-per-role registry (the house persist pattern).
-persist_scoped = _persist_scoped
 
 
 def release_caches() -> None:
@@ -210,7 +207,7 @@ def shingle_jaccard_pairs(
     # referenced three times (df-count, both join sides): persist so the
     # tokenize+md5 explode runs once per action. At 100 TB the same role
     # is played by writing the inverted index to a bucketed table.
-    sh = _persist_scoped("shingle_index", sh)
+    sh = persist_scoped("shingle_index", sh)
     if max_df is not None:
         hot = sh.groupBy("sh").count().filter(F.col("count") > max_df).select("sh")
         sh = sh.join(F.broadcast(hot), "sh", "left_anti")
@@ -307,7 +304,7 @@ def shingle_jaccard_prefix_pairs(
     )
     # the tokenize+md5 explode feeds the df aggregate AND the surviving
     # index — run it once
-    idx = _persist_scoped("jaccard_prefix_idx", idx)
+    idx = persist_scoped("jaccard_prefix_idx", idx)
     dfreq = idx.groupBy("sh").agg(F.count("*").alias("__df"))
     if max_df is not None:
         hot = dfreq.filter(F.col("__df") > max_df).select("sh")
@@ -323,7 +320,7 @@ def shingle_jaccard_prefix_pairs(
     w_all = w_rank.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    sized = _persist_scoped(
+    sized = persist_scoped(
         "jaccard_prefix_sized",
         surv.withColumn("n_sh", F.count("*").over(w_all)).withColumn(
             "rk", F.row_number().over(w_rank)
@@ -454,7 +451,7 @@ def minhash_lsh_pairs(
     ~linear) → dedup the pair → two equi-joins back to the compact
     signature table score each *distinct* pair once.
     """
-    sig = _persist_scoped(
+    sig = persist_scoped(
         "minhash_sig", minhash_signatures(df, text_col, id_col, n)
     )
     bands_df = minhash_band_table(sig, id_col, bands)
@@ -551,14 +548,14 @@ def incremental_minhash_pairs(
     O(new docs) shingling + a band join against the (bucketed) corpus
     band table — never a full-corpus rescan.
     """
-    new_sig = _persist_scoped(
+    new_sig = persist_scoped(
         "minhash_inc_new_sig",
         minhash_signatures(new_docs, text_col, id_col, n),
     )
     # the corpus signature table feeds banding AND scoring; in production
     # it is a persisted table already — pin it here so a freshly-computed
     # one isn't re-derived per subtree
-    corpus_sig = _persist_scoped("minhash_inc_corpus_sig", corpus_sig)
+    corpus_sig = persist_scoped("minhash_inc_corpus_sig", corpus_sig)
     all_sig = corpus_sig.unionByName(new_sig)
     new_bands = minhash_band_table(new_sig, id_col, bands)
     all_bands = minhash_band_table(all_sig, id_col, bands)
@@ -661,7 +658,9 @@ def connected_components(
     changed. Compression doubles the effective reach per round, so
     rounds needed = O(log diameter) instead of O(diameter) (r16:
     measured 12 → 7 rounds on the sf0.1 simhash graph). ``max_iter``
-    bounds pathological chains. Every round is one distributed join +
+    bounds pathological chains: if the labels still change in the last
+    round, this raises ``RuntimeError`` rather than return a partial
+    labelling. Every round is one distributed join +
     aggregate; ``localCheckpoint`` truncates the growing lineage so
     round N doesn't replay rounds 1..N-1, and convergence is detected
     by the monotone label-sum invariant (one flat aggregate), never an
@@ -678,7 +677,7 @@ def connected_components(
     # every round re-exchanged the PAIR table (the biggest side in the
     # loop) before its neighbor join; the persisted hashpartitioning(m)
     # is reused round-over-round, leaving only the label side to move.
-    sym = _persist_scoped(
+    sym = persist_scoped(
         "cc_sym",
         edges.select(F.col(src_col).alias("n"), F.col(dst_col).alias("m"))
         .union(
@@ -740,6 +739,10 @@ def connected_components(
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
     return labels.select(
         F.col("n").alias(node_col), F.col("label").alias("cluster_id")
     )
@@ -821,7 +824,7 @@ def simhash_pairs(
     single-split scan would compute them all on one core."""
     from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import ensure_parallelism
 
-    sim = _persist_scoped(
+    sim = persist_scoped(
         "simhash_signatures",
         simhash60(ensure_parallelism(df, id_col), text_col, id_col),
     )
@@ -853,102 +856,6 @@ def simhash_pairs(
         .select("id_a", "id_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def _canon_pairs(df: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
-    return (
-        df.select(
-            F.least(F.col(a), F.col(b)).alias("a"),
-            F.greatest(F.col(a), F.col(b)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    nodes: DataFrame,
-    node_col: str = "doc_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    contractions (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14 — public): each round rewires every node toward its
-    neighborhood minimum, so component diameter collapses geometrically
-    and convergence takes O(log n) rounds instead of the graph-diameter
-    rounds min-label propagation needs (`connected_components`). Same
-    output contract: every node labeled with its component's min id.
-
-    Each half-round is one groupBy (neighborhood min) + one join — the
-    same shuffle cost per round as propagation, but exponentially fewer
-    rounds on chain-like graphs; duplicate clusters are usually dense,
-    so both work there — this is the safety net for pathological chains.
-    Raises RuntimeError if ``max_iter`` rounds don't converge.
-    """
-    e = _canon_pairs(edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")))
-    e = e.localCheckpoint()
-
-    def _sym(pairs: DataFrame) -> DataFrame:
-        return pairs.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            pairs.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-
-    def _large_star(pairs: DataFrame) -> DataFrame:
-        sym = _sym(pairs)
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        m = F.least(F.col("mn"), F.col("u"))
-        out = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("a"), m.alias("b"))
-        )
-        return _canon_pairs(out)
-
-    def _small_star(pairs: DataFrame) -> DataFrame:
-        smalls = _sym(pairs).filter(F.col("v") < F.col("u"))
-        mins = smalls.groupBy("u").agg(F.min("v").alias("m"))
-        rewired = (
-            smalls.join(mins, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        self_edges = mins.select(F.col("u").alias("a"), F.col("m").alias("b"))
-        return _canon_pairs(rewired.union(self_edges))
-
-    def _checksum(pairs: DataFrame) -> tuple:
-        # xor fold: order-independent and overflow-free under ANSI mode
-        row = pairs.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    prev = _checksum(e)
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
-        cur = _checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(f"star contraction did not converge in {max_iter} rounds")
-
-    roots = _sym(e).groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("cluster_id")
-    )
-    return (
-        nodes.select(F.col(node_col))
-        .join(roots, F.col(node_col) == F.col("u"), "left")
-        .select(
-            node_col,
-            F.coalesce(F.col("cluster_id"), F.col(node_col).cast("long")).alias(
-                "cluster_id"
-            ),
-        )
     )
 
 
@@ -1063,7 +970,7 @@ def sorted_neighborhood_candidates(
     # the window (not below): all four consumers (intra explode, edge
     # a/b sides, count offsets) read the one materialized pass, which
     # also pins the sampled range boundaries every branch must share.
-    base = _persist_scoped(
+    base = persist_scoped(
         cache_role,
         stamped.select(
             a_rec.alias("__a"),
@@ -1214,7 +1121,7 @@ def _substring_pos_grams(
     ``clamp=False`` (incomplete tail grams drop — concat_ws skips the
     null leads, so keeping them would alias shorter grams), digests
     replacing the gram text so only 32-char keys ever shuffle."""
-    return _persist_scoped(
+    return persist_scoped(
         cache_role,
         shingle_rows(
             df, text_col=text_col, id_col=id_col, n=k, clamp=False
@@ -1656,7 +1563,7 @@ def winnow_match_pairs(
     # function predates (r15; the pair-join legs' exchanges deduped via
     # AQE stage reuse, but the hot-df aggregate leg re-ran the whole
     # fingerprint pipeline).
-    fps = _persist_scoped("winnow_fps", fps)
+    fps = persist_scoped("winnow_fps", fps)
     if max_df is not None:
         hot = (
             fps.groupBy("fp")
@@ -1795,7 +1702,7 @@ def incremental_winnow_matches(
         ensure_parallelism,
     )
 
-    new_fps = _persist_scoped(
+    new_fps = persist_scoped(
         "winnow_inc_new_fps",
         winnow_state(
             ensure_parallelism(new_docs, id_col),
@@ -1803,7 +1710,7 @@ def incremental_winnow_matches(
             unique_id=unique_id,
         ),
     )
-    corpus_fps = _persist_scoped(
+    corpus_fps = persist_scoped(
         "winnow_inc_corpus_fps", corpus_fps.select(id_col, "fp")
     )
     all_fps = corpus_fps.unionByName(new_fps)

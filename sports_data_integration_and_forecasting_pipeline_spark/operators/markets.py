@@ -3,8 +3,8 @@
 The reference computes these with per-group Python loops and ``idxmax``
 (``src/analysis.py:55-96``, ``web/app.py:36-71``). Here:
 
-- best price per ``(game_id, outcome)`` is ``max_by`` over a struct with an
-  explicit tiebreak — a single partial-aggregating shuffle, no window sort;
+- best price per ``(game_id, outcome)`` is ``row_number`` over a window
+  ordered by price, then bookmaker — the tie policy below, exactly;
 - the arbitrage margin, and every other per-game total repeated on the
   per-outcome rows, is a window over ``game_id`` on top of the argmax
   window.
@@ -36,47 +36,12 @@ def find_best_odds(
 ) -> DataFrame:
     """One row per ``(game_id, outcome)`` holding the best (max) price and
     its bookmaker (A3/A4/A5; reference ``src/analysis.py:9-31,69-70``,
-    ``web/app.py:39-43``).
+    ``web/app.py:39-43``): the whole input row, columns unchanged.
 
-    ``max_by`` over ``struct(price, reversed-bookmaker, full row)`` keeps
-    whole-row semantics in one aggregation.
+    Ties on price go to the alphabetically smallest bookmaker (the
+    module's tie policy), so the chosen row is deterministic and
+    oracle-hashable.
     """
-    group_cols = group_cols or ["game_id", "outcome"]
-    carry = [c for c in df.columns if c not in group_cols]
-    # Deterministic argmax: max price, ties broken by lexicographically
-    # smallest bookmaker (reference keeps first-encountered; SURVEY §4.3-4).
-    best = F.max_by(
-        F.struct(*[F.col(c) for c in carry]),
-        F.struct(
-            F.col("price"),
-            # invert bookmaker ordering inside a max: use negated rank via
-            # desc() is not allowed in max_by key, so flip with a trick:
-            # max over struct compares fields in order — we want max price
-            # then MIN bookmaker, so order by (price, unbase(bookmaker)).
-            _descending_string(F.col("bookmaker")),
-        ),
-    ).alias("_best")
-    out = df.groupBy(*group_cols).agg(best)
-    return out.select(*group_cols, *[F.col(f"_best.{c}").alias(c) for c in carry])
-
-
-def _descending_string(col):
-    """Map a string to a value whose max corresponds to the string's min.
-
-    Used as a secondary ``max_by`` sort key: comparing the negated byte
-    sequence is not expressible directly, so we compare the negative of a
-    stable 64-bit hash — deterministic, though not alphabetical. For exact
-    alphabetical min-tiebreak use :func:`find_best_odds_window`.
-    """
-    return -F.xxhash64(col)
-
-
-def find_best_odds_window(
-    df: DataFrame, group_cols: list[str] | None = None
-) -> DataFrame:
-    """Window-based variant of :func:`find_best_odds` with exact
-    (price desc, bookmaker asc) tie policy — used when alphabetical
-    determinism must hold for oracle hashing."""
     group_cols = group_cols or ["game_id", "outcome"]
     w = Window.partitionBy(*group_cols).orderBy(
         F.desc("price"), F.asc("bookmaker")
@@ -120,7 +85,7 @@ def _arb_margin(n_outcomes, total_implied):
 
 
 def _best_with_game_totals(df: DataFrame, **totals) -> DataFrame:
-    """Best row per ``(game_id, outcome)`` (:func:`find_best_odds_window`)
+    """Best row per ``(game_id, outcome)`` (:func:`find_best_odds`)
     plus one column per ``totals`` entry (name → aggregate over the game's
     best rows), evaluated over a ``game_id`` window.
 
@@ -129,7 +94,7 @@ def _best_with_game_totals(df: DataFrame, **totals) -> DataFrame:
     """
     w = Window.partitionBy("game_id")
     has_game = F.col("game_id").isNotNull()
-    return find_best_odds_window(df.repartition("game_id")).select(
+    return find_best_odds(df.repartition("game_id")).select(
         "*", *[F.when(has_game, agg.over(w)).alias(k) for k, agg in totals.items()]
     )
 
@@ -177,7 +142,7 @@ def build_summary(cleaned: DataFrame) -> DataFrame:
     outcomes, best_prices, best_bookmakers, arbitrage_margin_pct``
     (outcome→price/bookmaker maps instead of the reference's dicts).
     """
-    best = find_best_odds_window(cleaned)
+    best = find_best_odds(cleaned)
     per_game = best.groupBy("game_id").agg(
         F.first("home_team").alias("home_team"),
         F.first("away_team").alias("away_team"),

@@ -31,11 +31,6 @@ from pyspark.sql.window import Window
 
 DEFAULT_PLANES = 8
 
-# Hard cap on rows the dense exact-cosine baseline may collect to the
-# driver (1e5 rows × 64-dim float64 ≈ 51 MB broadcast — safe under the
-# 8g driver heap; anything bigger belongs on the LSH path).
-DENSE_COLLECT_MAX_ROWS = 100_000
-
 
 def dvec(col: Column) -> Column:
     """Widen array<float> → array<double> (exact)."""
@@ -324,79 +319,6 @@ def ivf_ann_topk_pretrained(
     )
 
 
-def cosine_dup_pairs_blocked(
-    emb_df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-    round_dp: int = 6,
-) -> DataFrame:
-    """Exact all-pairs cosine via blocked matmul: broadcast the full
-    (bounded — caller's responsibility) matrix, score each partition's
-    block against it with one BLAS ``A @ Mᵀ`` inside Arrow-batched
-    ``mapInPandas``. ~3× the interpreted per-pair fold on the same data.
-
-    Parity note: BLAS summation order differs from a sequential fold, but
-    rounding at ``round_dp`` absorbs the ~1e-15 relative difference
-    (verified exact-equal to the sequential-sum oracle on the fixed
-    testdata at sf0.01 and sf0.1). For unbounded tables use the LSH path
-    (``cosine_dup_pairs(exact=False)``) — this operator is the dense
-    exact baseline, not the 100 TB plan. The driver-collect bound is
-    ENFORCED (r6 review task 2): one cheap ``count()`` precedes the
-    collect and raises past ``DENSE_COLLECT_MAX_ROWS`` rows instead of
-    OOMing the driver — the ``_assert_bounded_group`` fail-loud style.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    n_rows = emb_df.count()
-    if n_rows > DENSE_COLLECT_MAX_ROWS:
-        raise AssertionError(
-            "cosine_dup_pairs_blocked dense-collect precondition "
-            f"violated: embeddings table has {n_rows:,} rows (bound "
-            f"{DENSE_COLLECT_MAX_ROWS:,}) — collecting and broadcasting "
-            "the full matrix would OOM the driver. Use the LSH-bucketed "
-            "path (cosine_dup_pairs(exact=False)) for unbounded tables; "
-            "this operator is the dense exact baseline only."
-        )
-    rows = emb_df.select(id_col, vec_col).collect()  # bound enforced above
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    M = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(M, axis=1)
-    bc = emb_df.sparkSession.sparkContext.broadcast((ids, M, norms))
-    scale = float(10**round_dp)
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def run(batches):
-        bids, bm, bnorms = bc.value
-        for pdf in batches:
-            a = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            if not len(a):
-                continue
-            an = np.linalg.norm(a, axis=1)
-            cos = (a @ bm.T) / np.outer(an, bnorms)
-            cos = np.floor(cos * scale + 0.5) / scale  # engine-identical _r
-            aid = pdf[id_col].to_numpy()
-            ai, bi = np.nonzero(cos >= threshold)
-            keep = aid[ai] < bids[bi]
-            yield pd.DataFrame(
-                {
-                    "id_a": aid[ai][keep],
-                    "id_b": bids[bi][keep],
-                    "cosine": cos[ai, bi][keep],
-                }
-            )
-
-    return emb_df.select(id_col, vec_col).mapInPandas(run, schema)
-
-
 def cosine_dup_pairs(
     emb_df: DataFrame,
     id_col: str = "vec_id",
@@ -411,8 +333,7 @@ def cosine_dup_pairs(
     cosine ≥ threshold.
 
     ``exact=True`` scores every pair (the O(n²) correctness baseline —
-    fine for bounded tables, the oracle path; see
-    :func:`cosine_dup_pairs_blocked` for the BLAS-accelerated variant).
+    fine for bounded tables, the oracle path).
     ``exact=False`` restricts to same-LSH-bucket pairs (the 100 TB path:
     near-dups have cosine ≈ 1 so they land in the same sign bucket with
     high probability).
@@ -575,8 +496,8 @@ def semantic_dedup_pairs(
     accumulation (``for d: acc += A[:,d]·B[:,d]``): per pair it
     performs the IDENTICAL left-to-right IEEE additions as the
     sequential fold — bit-exact against the DuckDB ``list_sum`` oracle,
-    unlike BLAS matmul's pairwise order (`cosine_dup_pairs_blocked`
-    relies on rounding to absorb that; this kernel doesn't have to) —
+    unlike BLAS matmul's pairwise order, which only rounding could
+    absorb —
     while the pair loop itself is vectorized C. Same sf1 scan: ~4 s.
 
     100 TB: CLUSTER GRANULARITY IS THE KNOB (the paper runs 50k
@@ -679,7 +600,7 @@ def semantic_dedup_keep(
     and exact on the dense clique-like groups semantic duplicates form;
     a pathological CHAIN of pairwise-similar-but-not-transitively-equal
     vectors may split across canonicals, which is the documented
-    difference from the full `connected_components_star` closure (use
+    difference from the full `dedup.connected_components` closure (use
     that on the pair output when chains matter).
 
     Returns ``(id_col, cell, canonical_id, is_kept)`` for EVERY input

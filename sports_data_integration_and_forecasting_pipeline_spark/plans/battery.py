@@ -7,8 +7,8 @@ monolith did (same 253 names, same order, byte-identical oracle SQL —
 proved by tools/check_battery_identity.py). This module keeps the
 historical import surface: every top-level name of every section is
 re-exported, so ``from ...plans.battery import _t, QUERIES, cube_pricing``
-all keep working, and the driver-window rotation ledger + curation stay
-here, next to the window they control.
+all keep working, and the window curation stays here, next to the
+window it controls.
 """
 
 from __future__ import annotations
@@ -59,49 +59,18 @@ QUERIES = battery_core.QUERIES
 query_map = battery_core.query_map
 oracle_sql_map = battery_core.oracle_sql_map
 
-
-
-# ===========================================================================
-# Driver-window curation (round-2 review directive). The external
-# correctness gate hard-caps its run at the FIRST 50 registered entries
-# (registration-order prefix, observed in rounds 1-2) — it cannot check
-# more — so registry order decides which 50 of the battery's entries get
-# the externally-verified signal. EVERY entry, windowed or not, is
-# verified by the identical DuckDB-hash comparison in the repo's own
-# tests/test_battery_oracle.py on every pytest run; this ordering changes
-# which subset the external gate duplicates, not which entries are
-# verified. The priority list packs the window with every SURVEY §2
-# operator family plus the head of each LLM-data-pipeline family (dedup,
-# text quality, sketches, embeddings, multimodal, streaming,
-# warehouse/skew); second variants of already-windowed families follow
-# after position 50. Names listed before their registration exists are
-# tolerated — they join the window once registered.
-# ===========================================================================
+# Window curation. An external correctness gate checks only the
+# first 50 registered entries, so registry order decides which 50 get
+# that extra signal. Every entry, windowed or not, is still checked
+# against its DuckDB oracle by tests/test_battery_oracle.py. Entries named
+# here move to the front in this order; the rest keep registration order.
 _WINDOW_PRIORITY = [
-    # r15 ROTATION (VERDICT r14 tasks 3+5, executed as prescribed): the
-    # backlog is CLOSED (cumulative 253/253 after a clean r14), so this
-    # window's job is RECENCY — rotate out the 38 r14 first-timers
-    # (now twice-green: r14 driver row + the r14 three-scale sweep) and
-    # the 11 re-confirmation slots (2-3x green), and fill all 49
-    # non-flagship slots with the entries whose LATEST driver row is
-    # OLDEST (tools/driver_coverage.py, sorted by latest-round then
-    # count), so minimum driver-row recency rises battery-wide from r1
-    # to r7+. Task 3's two stale rows-only entries lead the list:
-    # forecast_random_forest (last driver row r01) and
-    # misra_gries_heavy_hitters (r02) get their rows-only execution
-    # re-attested on current code. Every in-name re-swept green at
-    # sf0.01 THIS round before rotating in (tools/sweep_oracle.py,
-    # 49/49: 47 ok + 2 rows-only by design). Battery frozen (task 6):
-    # 0 additions, 253 entries.
     "flagship_market_report",
-    # task 3: the two by-design rows-only entries, stalest first
-    "forecast_random_forest",          # last driver row r01
-    "misra_gries_heavy_hitters",       # last driver row r02
-    # latest driver row r01:
+    "forecast_random_forest",
+    "misra_gries_heavy_hitters",
     "tfidf_top_terms",
     "kmv_distinct_sketch",
     "curation_pipeline",
-    # latest r02:
     "streaming_incremental_rollup",
     "streaming_session_windows",
     "streaming_line_moves",
@@ -109,9 +78,7 @@ _WINDOW_PRIORITY = [
     "dedup_simhash",
     "embed_ann_lsh",
     "value_percentiles",
-    # latest r03:
     "dedup_simhash_pairs",
-    # latest r04:
     "q6_promo_revenue",
     "misra_gries_verified",
     "salted_agg_parity",
@@ -126,7 +93,6 @@ _WINDOW_PRIORITY = [
     "dedup_exact",
     "embed_cosine_dup_pairs",
     "multimodal_payload_stats",
-    # latest r05:
     "pagerank_customer_supplier",
     "dedup_incremental_minhash",
     "asof_join_marks",
@@ -136,7 +102,6 @@ _WINDOW_PRIORITY = [
     "embed_cosine_topk",
     "multimodal_image_features",
     "streaming_replay_rollup",
-    # latest r06:
     "streaming_late_data_drop",
     "scd2_user_state_intervals",
     "pivot_event_cents",
@@ -149,498 +114,8 @@ _WINDOW_PRIORITY = [
     "q5_local_supplier_revenue",
     "bucketed_join_colocated",
     "canonical_schema_evolution",
-    # latest r07 (first of the r07 tail by confirmation count):
     "hll_group_registers",
 ]
-# --- Window composition of r14 (rotated out by the r15 rotation above;
-# --- kept verbatim for the ledger):
-    # r14 ROTATION (VERDICT r13 task 1, executed exactly as prescribed —
-    # clear the ENTIRE never-driver-checked backlog in one window): all
-    # 38 entries that have never had a driver row are in, so a clean r14
-    # closes external coverage at 253/253. OUT (38): the 17 twice-green
-    # r12-window first-timers (text_bpe_encode_ranked,
-    # hll_distinct_verified, approx_percentile_verified,
-    # dsir_importance_weights, quality_auc_audit,
-    # embed_matryoshka_overlap, curation_pipeline_v5,
-    # sketch_merge_parity, weighted_sample_es_topk,
-    # dedup_incremental_compacted, inverted_text_index,
-    # dedup_normalized_exact, kfold_split_audit, sample_events_hash,
-    # snapshot_table_diff, profile_orders_table, source_reputation —
-    # green in BOTH the r12 and r13 windows), the multi-green pinned
-    # family head dedup_shingle_jaccard (driver-green r7/r12/r13; its
-    # slot passes to the never-checked bounded all-pairs twin
-    # dedup_shingle_jaccard_all), and 20 of the 31 once-green r13
-    # first-timers (mixture_cap_prefix_fill, source_length_psi,
-    # text_unigram_entropy_audit, embed_label_separation,
-    # pack_padding_waste_curve, abtest_proportion_ztest, cube_pricing,
-    # forward_fill_gaps, ohlc_hourly_bars, rollup_pricing,
-    # grouping_sets_pricing, embed_mean_pool, mixture_sample_langs,
-    # embed_quantize_int8, leakage_safe_split, chi_square_drift,
-    # benford_first_digit_audit, fuzzy_name_match, monthly_active_users,
-    # event_gap_detection — once-green rotation-out is the r13
-    # verdict's explicit instruction; every one keeps its local
-    # DuckDB-hash check on each pytest run). IN (38 first-timers, every
-    # name re-swept green at sf0.01 THIS round before rotating in via
-    # tools/sweep_oracle.py, 38/38 ok): the 4 r13 additions (standing
-    # convention — front of the next window) + the full 34-entry
-    # never-checked tail. The remaining 11 slots re-confirm once-green
-    # r13 first-timers (family heads and the round's heavies) so they
-    # go twice-green and can rotate out in r15. Cumulative driver
-    # coverage on a clean r14 = 215 + 38 = 253/253 — every battery
-    # entry externally confirmed at least once.
-    # "flagship_market_report",
-    # r13 additions first (standing convention):
-    # "dedup_cluster_soft_weights",
-    # "embed_contamination_audit",
-    # "text_bpe_vocab_coverage",
-    # "embed_hard_negatives",
-    # the 34-entry never-driver-checked tail (backlog close-out):
-    # "dedup_shingle_jaccard_all",
-    # "orders_vs_customer_avg",
-    # "twap_user_value",
-    # "time_to_convert",
-    # "order_price_relative_rank",
-    # "order_price_deciles",
-    # "session_click_purchase_funnel",
-    # "orders_price_histogram",
-    # "feature_standardize",
-    # "customers_with_big_orders",
-    # "customers_without_orders",
-    # "weighted_systematic_sample",
-    # "sample_events_stratified",
-    # "embed_quantized_topk",
-    # "feature_correlation_screen",
-    # "incremental_rollup_merge",
-    # "iceberg_heavy_users",
-    # "weekday_hour_heatmap",
-    # "triangle_knn_cosupply",
-    # "user_trend_ols",
-    # "rolling_active_users_7d",
-    # "event_transition_matrix",
-    # "unpivot_order_measures",
-    # "purchase_click_attribution",
-    # "hierarchy_root_depth",
-    # "table_checksum_audit",
-    # "null_skew_left_join",
-    # "seasonal_weekday_index",
-    # "ridge_forecast_closed_form",
-    # "seasonal_anomaly_days",
-    # "range_frame_trailing_hour",
-    # "multi_touch_attribution",
-    # "activity_bitmap_days",
-    # "brand_price_realization",
-    # 11 re-confirmations (once-green r13 first-timers -> twice-green,
-    # r15 rotation fodder; heavies + family heads kept under external
-    # watch):
-    # "curation_pipeline_v6",
-    # "split_leakage_audit",
-    # "embed_ivfpq_refine_topk",
-    # "ngram_novelty_audit",
-    # "mixture_waterfill_caps",
-    # "dedup_substring_coverage",
-    # "text_zipf_fit",
-    # "quality_gate_ablation",
-    # "skew_key_report",
-    # "dedup_cluster_assign",
-    # "training_shard_manifest",
-# --- Window compositions of earlier rounds (moved out of the live list
-# --- by the r14 rotation; kept verbatim for the ledger):
-    # r13 ROTATION (VERDICT r12 tasks 1+2, executed exactly per the
-    # pinned schedule below — "raise the churn": THIRTY-ONE slots
-    # turned over, the largest rotation yet, because at 17/round the
-    # 65-entry never-driver-checked backlog never cleared). OUT (31):
-    # the 13 multi-green §2 core anchors (devig_proportional,
-    # best_price_per_order, rolling_avg_events, odds_format_normalize,
-    # ev_battery, backtest_roi, snapshot_union, customer_order_rollup,
-    # topk_orders, nested_explode_flatten, event_sessionize,
-    # forecast_linear_ols, text_token_stats — every one 4-12×
-    # driver-green across r1-r12; the local DuckDB oracle still checks
-    # them on every pytest run, and flagship_market_report stays pinned
-    # as the §2 flagship) and the 18 r11-window first-timers, green in
-    # BOTH the r11 and r12 windows (text_bpe_encode,
-    # embed_ivfpq_precoded_topk, hybrid_rrf_fusion, text_distinct_ngrams,
-    # mixture_temperature_weights, pack_bpe_sequence_spans,
-    # dedup_incremental_winnow, embed_mmr_rerank, dedup_lsh_recall_audit,
-    # text_bpe_fertility, streaming_quality_filter, language_id_confusion,
-    # curation_pipeline_v4, curation_pipeline_v3, ewma_user_value,
-    # referential_integrity_audit, mad_outlier_events,
-    # ship_latency_by_priority). IN (31, all pre-swept green at sf0.01
-    # THIS round via tools/sweep_oracle.py, 31/31 ok — see the r13 note
-    # in the rotation schedule comment): the 13 r12 additions (held out
-    # of the r12 window per the standing convention, each also swept at
-    # sf0.001 AND sf0.01 on arrival) plus 18 backlog heads that have
-    # NEVER had a driver row. The 17 r12-window first-timers stay
-    # (once-green; rotate out in r14 when twice-green). 31 first-timers
-    # this window; cumulative driver coverage on a clean r13 =
-    # 184 + 31 = 215/249 pre-r13 entries.
-    # r12 additions first (standing convention):
-    # never-driver-checked backlog heads (verdict-named tail first —
-    # abtest/cube/forward_fill/ohlc/rollup/grouping_sets — then one
-    # head per still-unchecked family: dedup clustering, embedding
-    # pooling/quantization, training-data plumbing, drift/audit pack,
-    # time-series gaps):
-    # r11 ROTATION (VERDICT r10 task 1, executed exactly per the pinned
-    # schedule): EIGHTEEN twice-or-more-driver-green slots rotated out —
-    # text_unigram_perplexity (its r8 bench-swing adjudication is
-    # externally confirmed twice over), dedup_substring_clip,
-    # pack_sequence_spans, embed_ann_recall_audit, the analytics second
-    # wave (entropy_source_mix, lorenz_curve_orders,
-    # markov_steady_state_power, kcore_cosupply_peel,
-    # winsorized_event_stats, quantile_normalize_events,
-    # date_spine_zero_fill), streaming_pit_enrich,
-    # multimodal_frame_sample, and the TPC-H q-tail (q4, q7, q14, q15,
-    # q19) — all green in BOTH r9 and r10 driver windows — in favor of
-    # the THIRTEEN r10 additions (each swept green at sf0.01 on arrival,
-    # per the r11 addendum in the rotation schedule comment) plus FIVE
-    # backlog heads named by the r10 verdict (curation_pipeline_v3,
-    # ewma_user_value, referential_integrity_audit, mad_outlier_events,
-    # ship_latency_by_priority — all green in the end-of-r10 full
-    # 223-entry sf0.01 sweep AND re-swept at sf0.01 this round before
-    # rotating in). 18 out / 18 in; 18 first-timers. The 17 r10
-    # first-timers stay (once-green; rotate out in r12 when twice-green).
-    # dedup_shingle_jaccard stays pinned as the pairwise-dedup family
-    # head. (The 18 r11-window first-timers this note rotated IN went
-    # twice-green at r12 and rotated OUT at r13 — see the r13 ROTATION
-    # note at the top of this list.)
-    # r12 ROTATION (VERDICT r11 task 1, executed exactly per the pinned
-    # schedule below): seventeen twice-driver-green slots rotated out —
-    # the 17 r10 first-timers, green in BOTH the r10 and r11 windows
-    # (dedup_winnow_fingerprints, dedup_winnow_match_pairs,
-    # embed_pq_codes, embed_pq_adc_topk, embed_ivfpq_topk,
-    # embed_semdedup_keep, text_bpe_merges, multimodal_cdc_chunks,
-    # multimodal_cdc_dedup_stats, quality_linear_filter,
-    # dedup_soft_weights, dedup_incremental_substring,
-    # streaming_dedup_replay, streaming_static_enrich,
-    # multimodal_audio_duration, pmi_bigram_collocations,
-    # quality_perplexity_cut) — in favor of the NINE r11 additions
-    # (each swept green at sf0.001 AND sf0.01 on arrival, held out of
-    # the r11 window per the standing convention) plus EIGHT
-    # verdict-named backlog heads. Every in-name re-swept green at
-    # sf0.01 THIS round before rotating in (tools/sweep_oracle.py,
-    # 17/17 ok — approx_percentile_verified re-swept after its r12
-    # slack widening). 17 out / 17 in; 17 first-timers. The 18 r11
-    # first-timers stay (once-green; rotate out in r13 when
-    # twice-green). NOTE: the verdict's suggested embed_cosine_dup_pairs
-    # already had an early-round driver row (rotated out r5), so the
-    # named alternate kfold_split_audit (never-checked, pre-swept ok)
-    # takes that slot to keep the window at 17 true first-timers.
-    # r11 additions first:
-    # verdict-named backlog heads (all green in the r11 full sweep AND
-    # the r12 pre-rotation sweep):
-    # family head that stays pinned (pairwise dedup):
-
-# Round-5 rotation (round-4 review task 1): every SURVEY §2 family head
-# is twice-driver-green and stable, so 8 second-tier slots
-# (chunk_documents_overlap, path_funnel_regex, q6_promo_revenue,
-# salted_agg_parity, multimodal_payload_stats, embed_cosine_dup_pairs,
-# misra_gries_verified, curation_pipeline_v2) rotated out in favor of
-# the strongest never-driver-checked entries (range join, SCD2, z-order,
-# cluster-star, vocab coverage, pivot, watermark late-drop, sequence
-# packing); later in r5, text_language_id and dedup_exact (both twice
-# driver-green) yielded to the new kmeans_embeddings_lloyd and
-# q8_nation_market_share; later still, repetition_quality,
-# embed_ivf_ann, and streaming_stream_join (all twice driver-green)
-# yielded to the new cusum_changepoint, kaplan_meier_conversion, and
-# copurchase_lift_pairs, and countmin_frequency to bm25_scoring.
-# Round-6 rotation (r5 review tasks 2+6): nine twice-driver-green slots
-# (pagerank_customer_supplier, dedup_incremental_minhash,
-# decontaminate_benchmark, pii_redaction, bloom_join_prune,
-# embed_cosine_topk, multimodal_image_features, streaming_replay_rollup,
-# asof_join_marks) yielded to the strongest never-driver-checked entries
-# (theil_sen_user_trend, set_ops_churn_audit, variant_props_extract,
-# hll_group_registers + hll_rolling_7d_users — the engine-portable
-# sketch showpieces the review asked for by name — weighted_median_price,
-# recursive_cte_walk, session_window_native, q21_sole_latest_shipper).
-# Rotated-out entries remain verified by the identical local
-# DuckDB-hash comparison on every pytest run.
-# Round-9 rotation (r8 review task 2, executed against the pinned
-# schedule below): seventeen twice-or-more-driver-green slots rotated
-# out (the 12 r7 first-timers, twice-green at r8: kl_term_drift,
-# text_bigram_perplexity, theil_sen_banded, holt_linear_user_value,
-# pit_state_lookup, embedding_quality_audit, q3_shipping_priority,
-# q10_returned_items, q18_large_volume_customers,
-# gini_order_concentration, acf_daily_autocorrelation,
-# yoy_monthly_growth; plus 5 multi-green second-tier: text_quality,
-# kmeans_embeddings_lloyd, vocab_coverage, bm25_scoring — its r7
-# rank-rewrite externally confirmed r8 — and dedup_cluster_star) in
-# favor of the r8 family completions (dedup_substring_clip,
-# embed_ann_recall_audit), text_unigram_perplexity (never checked AND
-# the r8 +100% bench swing — rotation doubles as adjudication), the
-# five never-checked TPC-H q-tail entries (q4, q7, q14, q15, q19), the
-# analytics second wave (entropy_source_mix, lorenz_curve_orders), the
-# r6 stats pack (winsorized_event_stats, quantile_normalize_events,
-# date_spine_zero_fill), markov_steady_state_power, kcore_cosupply_peel,
-# the streaming PIT batch twin (streaming_pit_enrich), and
-# multimodal_frame_sample (VERDICT r8 task 5). All seventeen swept
-# green vs the oracle at sf0.01 — the gate scale — before rotating in
-# (tools/sweep_oracle.py). The 17 r8 first-timers stay (once-green).
-# Round-8 rotation (r7 review task 1 — "rotate hard", 15-20 slots):
-# seventeen twice-or-more-driver-green slots rotated out (7 core
-# second-tier: devig_power, arbitrage_scan, best_odds_report_join,
-# lead_target_events, accuracy_metric, pricing_summary,
-# json_props_rollup; 9 r6 first-timers now twice-green:
-# theil_sen_user_trend, set_ops_churn_audit, variant_props_extract,
-# hll_group_registers, hll_rolling_7d_users, weighted_median_price,
-# recursive_cte_walk, session_window_native, q21_sole_latest_shipper;
-# plus dedup_minhash_lsh) in favor of the five never-checked r7 family
-# heads (merge_upsert_orders, ivf_centroid_refresh,
-# dedup_sorted_neighborhood, skyline_supplier_frontier,
-# skyline_orders_3d), the two new r8 family heads
-# (dedup_substring_spans, contamination_kmv_audit), and the strongest
-# never-checked tail (dedup_cluster_size_histogram,
-# pareto_supplier_share, zipf_rank_frequency_fit,
-# frequent_event_trigrams, concurrency_sweep_line, rfm_user_segments —
-# the two r7 rank-rewrites, external confirmation —
-# q13_order_count_distribution, q17_small_quantity_revenue,
-# q22_idle_customer_balance, cohort_weekly_retention). The 12 r7
-# first-timers stay (once-green; rotate out in r9 when twice-green).
-# Round-7 rotation (r6 review task 1): twelve twice-driver-green slots
-# (cusum_changepoint, kaplan_meier_conversion, copurchase_lift_pairs,
-# bucketed_join_colocated, range_join_concurrent_sessions,
-# scd2_user_state_intervals, zorder_layout_pruning, pivot_event_cents,
-# canonical_schema_evolution, q5_local_supplier_revenue,
-# q8_nation_market_share, streaming_late_data_drop) yielded to the
-# strongest never-driver-checked entries (kl_term_drift,
-# text_bigram_perplexity, theil_sen_banded, holt_linear_user_value,
-# pit_state_lookup, embedding_quality_audit, q3_shipping_priority,
-# q10_returned_items, q18_large_volume_customers,
-# gini_order_concentration, acf_daily_autocorrelation,
-# yoy_monthly_growth).
-#
-# ROTATION SCHEDULE (r6 review task 5, updated r8 — the plan in
-# writing so it survives context loss). ~84 entries still lack a
-# driver row after the r8 window; at 15-17 fresh slots per round the
-# backlog clears in ~5 more rotations. Rotate OUT only slots that are
-# twice-driver-green at that round; flagship_market_report plus one
-# head per §2 family stay pinned (the r7 verdict loosened the
-# 20-slot core pin):
-#   r9: DONE (see Round-9 rotation note above) — 17 out / 17 in,
-#       including all of the planned list plus q4_order_priority,
-#       text_unigram_perplexity, and multimodal_frame_sample.
-#   r10 addendum (late r9): ALL eleven r9 entries
-#       (dedup_winnow_fingerprints/_match_pairs, embed_pq_codes,
-#       embed_pq_adc_topk, embed_ivfpq_topk, embed_semdedup_keep,
-#       text_bpe_merges, multimodal_cdc_chunks/_dedup_stats,
-#       quality_linear_filter, dedup_soft_weights) are swept green at
-#       sf0.01 on arrival — rotation-safe; put the family heads
-#       (winnow_fingerprints, ivfpq_topk, semdedup_keep, bpe_merges,
-#       cdc_chunks, quality_linear_filter) near the front of the r10
-#       in-list. The r10 candidate tail was ALSO pre-swept green at
-#       sf0.01 this round (tools/sweep_oracle.py, end of r9):
-#       dedup_incremental_substring, streaming_dedup_replay,
-#       streaming_static_enrich, multimodal_audio_duration,
-#       pmi_bigram_collocations, mad_outlier_events,
-#       quality_perplexity_cut, referential_integrity_audit,
-#       inverted_text_index, dedup_incremental_compacted,
-#       dedup_normalized_exact, embed_cosine_dup_pairs,
-#       embed_cosine_topk, sample_events_hash, snapshot_table_diff,
-#       profile_orders_table — every name on the r10 in-list already
-#       has a same-scale green sweep on record. End of r9, the ENTIRE
-#       216-entry battery was additionally swept in one run at sf0.01
-#       (212 hash-ok + the 4 by-design rows-only, rc 0) — a full local
-#       replica of the driver gate over every entry, so ANY r10+
-#       rotation choice is same-scale pre-verified.
-#   r10: EXECUTED (see the r10 ROTATION note in _WINDOW_PRIORITY) —
-#       17 out / 17 in exactly as planned below; every in-name had a
-#       same-scale green sweep on record (the end-of-r9 full 216-entry
-#       sf0.01 sweep + the named pre-sweep) and the three entries whose
-#       SEMANTICS changed this round (multimodal_cdc_chunks/_dedup_stats
-#       empty-payload guard, quality_linear_filter zero-division guard)
-#       were re-swept green at sf0.01 AFTER the fix before rotating in.
-#       Original plan follows:
-#       rotate out the 17 r8 first-timers once twice-green
-#       (merge_upsert_orders, ivf_centroid_refresh,
-#       dedup_sorted_neighborhood, skyline_supplier_frontier,
-#       skyline_orders_3d, dedup_substring_spans,
-#       contamination_kmv_audit, dedup_cluster_size_histogram,
-#       pareto_supplier_share, rfm_user_segments,
-#       concurrency_sweep_line, zipf_rank_frequency_fit,
-#       frequent_event_trigrams, cohort_weekly_retention, q13, q17,
-#       q22); rotate in dedup_incremental_substring (the last
-#       never-checked r8 family member), the remaining streaming batch
-#       twins (streaming_dedup_replay, streaming_static_enrich),
-#       multimodal_audio_duration, pmi_bigram_collocations,
-#       mad_outlier_events, quality_perplexity_cut,
-#       referential_integrity_audit, inverted_text_index,
-#       dedup_incremental_compacted, dedup_normalized,
-#       cosine_dup_pairs family heads, and sampling/diff/profile pack
-#       heads — sweep each at sf0.01 via tools/sweep_oracle.py first.
-#   r11 addendum (r10): the THIRTEEN round-10 additions (text_bpe_encode,
-#       embed_ivfpq_precoded_topk, hybrid_rrf_fusion,
-#       text_distinct_ngrams, mixture_temperature_weights,
-#       pack_bpe_sequence_spans, dedup_incremental_winnow,
-#       embed_mmr_rerank, dedup_lsh_recall_audit, text_bpe_fertility,
-#       streaming_quality_filter, language_id_confusion,
-#       curation_pipeline_v4) are each swept green at sf0.01 on arrival
-#       and held OUT of the r10 window (the r9 convention) — put them
-#       at the front of the r11 in-list. ALSO: quality_linear_filter's
-#       pinned bias was recalibrated late r10 (-900k -> -200k — the r9
-#       bias kept ZERO documents, making v3's quality gate vacuous);
-#       quality_linear_filter, streaming_quality_filter,
-#       curation_pipeline_v3 and v4 were ALL re-swept green at sf0.001
-#       AND sf0.01 after the recalibration.
-#   End-of-r10 standing-protocol sweep (VERDICT r9 task 2): the then-
-#       223-entry battery swept in ONE run at sf0.01 (the driver gate
-#       scale) — 219 hash-ok + the 4 by-design rows-only, rc 0
-#       (tools/sweep_oracle.py, after the cdc/quality-filter/BPE
-#       semantic fixes). The two entries added after that sweep
-#       (embed_mmr_rerank, dedup_lsh_recall_audit) were each
-#       individually swept green at sf0.01 on arrival, so all 225
-#       entries have a same-scale green sweep dated r10.
-#   r11: EXECUTED (see the r11 ROTATION note in _WINDOW_PRIORITY) —
-#       18 out / 18 in exactly as planned: the 13 r10 additions plus the
-#       5 verdict-named backlog heads, every in-name re-swept green at
-#       sf0.01 this round before rotating in. NINE r11 additions are
-#       each swept green at sf0.001 AND sf0.01 on arrival and held OUT
-#       of the r11 window (the standing convention — front of the r12
-#       in-list): text_bpe_encode_ranked (shares text_bpe_encode's
-#       oracle), hll_distinct_verified + approx_percentile_verified
-#       (replaced the two rows-only sketch entries — rows-only residue
-#       is now just misra_gries_heavy_hitters, which has its verified
-#       twin, and forecast_random_forest), dsir_importance_weights,
-#       quality_auc_audit, embed_matryoshka_overlap, curation_pipeline_v5,
-#       sketch_merge_parity, weighted_sample_es_topk. r12 rotation-out
-#       candidates: the 17 r10
-#       first-timers (twice-green if r11 comes back clean) — 17 out is
-#       enough for the 9 additions plus 8 backlog heads (suggested:
-#       dedup_incremental_compacted, inverted_text_index,
-#       dedup_normalized_exact, embed_cosine_dup_pairs, sample_events_hash,
-#       snapshot_table_diff, profile_orders_table, source_reputation,
-#       kfold_split_audit — all green in the r11 full sweep).
-#   End-of-r11 standing-protocol sweep (VERDICT r10 task 4): run TWICE
-#       this round. Mid-round: 234 entries, 232 hash-ok + 2 by-design
-#       rows-only, rc 0, wall 410 s. End-of-round (after
-#       sketch_merge_parity and the rank_sum_auc degenerate-label
-#       guard): the full 235-entry battery in ONE run — 233 hash-ok +
-#       the same 2 rows-only, rc 0, wall 412 s. Final (after
-#       weighted_sample_es_topk): 236 entries in ONE run — 234 hash-ok
-#       + the 2 by-design rows-only (forecast_random_forest,
-#       misra_gries_heavy_hitters), rc 0, wall 312 s (local[8],
-#       tools/sweep_oracle.py) — far inside the round budget, so no
-#       alphabetical split needed at this size.
-#   r12: EXECUTED (see the r12 ROTATION note in _WINDOW_PRIORITY) —
-#       17 out / 17 in: the 9 r11 additions plus 8 backlog heads
-#       (BOTH of the verdict's either/or names source_reputation AND
-#       kfold_split_audit went in — its suggested embed_cosine_dup_pairs
-#       turned out to have an early r-row already, so the never-checked
-#       alternate took the slot), every in-name re-swept green at
-#       sf0.01 this round before rotating in (18 sweeps counting the
-#       dropped embed_cosine_dup_pairs).
-#   r12 addendum: THIRTEEN r12 additions (ngram_novelty_audit,
-#       mixture_waterfill_caps, dedup_substring_coverage,
-#       mixture_cap_prefix_fill, text_zipf_fit, source_length_psi,
-#       embed_ivfpq_refine_topk, quality_gate_ablation,
-#       split_leakage_audit, curation_pipeline_v6,
-#       text_unigram_entropy_audit, embed_label_separation,
-#       pack_padding_waste_curve) are each swept green at sf0.001 AND
-#       sf0.01 on arrival and held OUT of the r12 window (standing
-#       convention) — front of the r13 in-list. Each arrived with its
-#       degenerate-input property tests
-#       (tests/test_properties_round12.py), a plan pin, a bench
-#       HEADLINE slot, and an sf0.01→sf0.1 probe (SCALING.md §Round-12
-#       probes).
-#   Mid-r12 standing-protocol sweep (VERDICT r11 task 4): the full
-#       243-entry battery (as of embed_ivfpq_refine_topk; the later
-#       additions swept individually on arrival) in ONE run at sf0.01 —
-#       241 hash-ok + the 2 by-design rows-only
-#       (forecast_random_forest, misra_gries_heavy_hitters), rc 0
-#       (tools/sweep_oracle.py, local[8]). End-of-round sweep covers
-#       the final battery.
-#   End-of-r12 standing-protocol sweep: the FINAL 249-entry battery in
-#       ONE run at sf0.01 — 247 hash-ok + the same 2 by-design
-#       rows-only, rc 0 (tools/sweep_oracle.py, local[8]; re-run after
-#       pack_padding_waste_curve landed — the earlier same-session run
-#       covered 248 at the same result).
-#   r13: EXECUTED (see the r13 ROTATION note at the top of
-#       _WINDOW_PRIORITY) — 31 out / 31 in, the largest turnover yet
-#       (VERDICT r12 task 2: "raise the churn to >= 25 first-timers").
-#       OUT: the 13 multi-green §2 core anchors + the 18 twice-green
-#       r11-window first-timers. IN: the 13 r12 additions + 18
-#       never-checked backlog heads (abtest_proportion_ztest,
-#       cube_pricing, forward_fill_gaps, ohlc_hourly_bars,
-#       rollup_pricing, grouping_sets_pricing, dedup_cluster_assign,
-#       embed_mean_pool, training_shard_manifest, skew_key_report,
-#       mixture_sample_langs, embed_quantize_int8, leakage_safe_split,
-#       chi_square_drift, benford_first_digit_audit, fuzzy_name_match,
-#       monthly_active_users, event_gap_detection). EVERY in-name
-#       re-swept green at sf0.01 THIS round before rotating in
-#       (tools/sweep_oracle.py, 31/31 ok — the four operators touched
-#       by the r12 ADVICE fixes re-swept after the fix commit).
-#   r13 addendum: FOUR r13 additions (dedup_cluster_soft_weights,
-#       embed_contamination_audit, text_bpe_vocab_coverage — the three
-#       verdict-named gap fillers — plus embed_hard_negatives, the
-#       late-r13 contrastive-training miner; growth 4 ≤ the task-3 cap
-#       of 4-6) are each swept green at sf0.001 AND sf0.01 on arrival
-#       and held OUT of the r13 window (standing convention) — front of
-#       the r14 in-list. Each arrived with degenerate-input property
-#       tests (tests/test_properties_round13.py), a plan pin, bench
-#       slots (dedup_cluster_soft_weights bench-excluded per the
-#       iterative cluster-family rule, documented in bench.py), and
-#       sf0.01→sf0.1 probes (SCALING.md §Round-13 probes).
-#   End-of-r13 standing-protocol sweep: the FINAL 253-entry battery in
-#       ONE run at sf0.01 — 251 hash-ok + the same 2 by-design
-#       rows-only (forecast_random_forest, misra_gries_heavy_hitters),
-#       rc 0 (tools/sweep_oracle.py, local[8]; after the r13 additions
-#       — embed_hard_negatives arrived last — the r12 ADVICE fixes,
-#       and the shingle posting-list build/revert cycle; an earlier
-#       252-entry sweep also ran rc 0 mid-round). NEW this round: the
-#       SAME final 253-entry battery additionally swept in full at
-#       sf0.001 (251 hash-ok + the same 2 rows-only, rc 0) — the first
-#       battery-wide BOTH-scales record in one round; the sf0.001 leg
-#       catches small-input edge regressions the sf0.01 gate can miss.
-#       Closing pytest: 1016 passed, 1 skipped, 0 failed (full suite,
-#       run fresh after the last code change of the round). Calm bench
-#       archive BENCH_local_r13_calm.json (drift 0.144, flag FALSE —
-#       the round's only unflagged session; shingle 1.176 s at level).
-#   BACKLOG SCHEDULE TO 249/249 (VERDICT r12 task 2's written plan;
-#       never-driver-checked count was 65 entering r13):
-#       - r13 window confirms 31 first-timers -> backlog 34 of the 249
-#         pre-r13 entries (plus the handful of r13 additions, held out
-#         per the standing convention). Cumulative 215/249.
-#       - r14: the 17 r12-window first-timers go twice-green on a clean
-#         r13 -> rotate them out; in-list = the r13 additions (front)
-#         + ~13 backlog heads. Cumulative ~232/249; backlog ~21.
-#       - r15: the 31 r13-window first-timers go twice-green -> rotate
-#         out; 31 slots take the ENTIRE remaining backlog (~21 + the
-#         r14 additions). Cumulative = 100% of every entry registered
-#         through r14 — 249/249 of today's battery.
-#       Keep battery growth <= 6/round (task 3) so r15 closes the gap.
-#   r14: EXECUTED (see the r14 ROTATION note at the top of
-#       _WINDOW_PRIORITY) — the r13 verdict (task 1) superseded the
-#       two-round plan above and prescribed clearing the ENTIRE 38-entry
-#       backlog in ONE window: 38 out / 38 in, all 38 never-checked
-#       entries in at once (4 r13 additions + 34-entry tail), 11
-#       re-confirmation slots for once-green r13 first-timers, flagship
-#       pinned. Every in-name re-swept green at sf0.01 THIS round
-#       before rotating in (tools/sweep_oracle.py, 38/38 ok). Battery
-#       growth frozen this round (verdict task 2: 0-2 additions max) —
-#       0 additions; a clean r14 window closes cumulative coverage at
-#       253/253.
-#   End-of-r14 standing-protocol sweep: the unchanged 253-entry battery
-#       in ONE run at sf0.01 — 251 hash-ok + the 2 by-design rows-only
-#       (forecast_random_forest, misra_gries_heavy_hitters), rc 0 — AND
-#       the same battery in full at sf0.001 (251 hash-ok + 2 rows-only,
-#       rc 0), both AFTER the r14 split of battery.py into per-family
-#       section modules (identity md5s unchanged; see
-#       tools/check_battery_identity.py), the kl_term_drift /
-#       ngram-novelty int64-headroom guards, and the rotation. Calm
-#       bench archive BENCH_local_r14_calm.json (drift 0.123 flag
-#       FALSE; total flat calm-vs-calm at 133.2 s / 253 entries).
-#       Closing pytest: 1019 passed, 1 skipped (full suite, run fresh
-#       after the last change of the round; +3 vs r13 = the split
-#       invariants in tests/test_battery_sections.py). A 50/50 dress
-#       rehearsal of the r14 window also ran green through
-#       __spark_entry__ at sf0.01 (the exact driver path), and the
-#       window-50 additionally swept green at sf0.1 — every slot the
-#       driver will check is green at THREE scales this round.
-#   r15 rotation plan: the 38 r14-window first-timers go twice-green on
-#       a clean r14 -> rotate them out; the 11 re-confirmed slots are
-#       then 2-3× green and rotate too. With the backlog CLOSED
-#       (cumulative 253/253 on a clean r14), r15's window should
-#       re-confirm the least-recently-checked entries (the r13
-#       rotation-outs are the oldest single/multi-greens) plus any r15
-#       additions after their arrival sweeps.
-# ===========================================================================
 
 
 def _curate_order() -> None:

@@ -787,8 +787,8 @@ _DUP_PLANES = hyperplanes(n_planes=_DUP_PLANES_N, dim=_EMB_DIM)
     """,
     "textops: embedding-cosine near-dup (LSH-bucketed scale path)",
     "same-sign-bucket pairs with cosine >= 0.35 — the 100 TB plan: bucket "
-    "equi-join replaces the all-pairs cross; exact blocked-matmul baseline "
-    "stays as a unit-tested operator (cosine_dup_pairs_blocked)",
+    "equi-join replaces the all-pairs cross; the exact all-pairs path "
+    "(cosine_dup_pairs(exact=True)) stays as the unit-tested reference",
 )
 def embed_cosine_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-safe registered path: LSH sign-bucket join (no driver collect,

@@ -1246,26 +1246,26 @@ def pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("node", F.col("pr").cast("long").alias("pr"))
 
 
-# Same clusters via alternating large-star/small-star contraction
-# (O(log n) rounds vs propagation's graph-diameter rounds — the safety
-# net for chain-shaped components). Identical output contract, so it
-# reuses dedup_cluster_assign's recursive-CTE oracle verbatim.
+# The same clusters under a second registered name: it runs the same
+# operator as dedup_cluster_assign (min-label propagation, whose path
+# compression needs O(log diameter) rounds even on chains) and reuses
+# that entry's recursive-CTE oracle verbatim.
 @_register(
     "dedup_cluster_star",
     None,  # replaced right below with the shared propagation oracle
-    "dedup clusters: large-star/small-star contraction (no reference counterpart)",
-    "Kiveris-style star contraction over SimHash pairs — same labels as "
-    "propagation in O(log n) rounds",
+    "dedup clusters: connected components, second registration (no reference counterpart)",
+    "min-label propagation with path compression over SimHash pairs — "
+    "the operator and oracle of dedup_cluster_assign",
 )
 def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
         simhash_pairs,
     )
 
     docs = _t(spark, sf_dir, "documents")
     edges = simhash_pairs(docs, max_hamming=3).select("id_a", "id_b")
-    return connected_components_star(edges, docs, node_col="doc_id")
+    return connected_components(edges, docs, node_col="doc_id")
 
 
 QUERIES["dedup_cluster_star"] = dataclasses.replace(

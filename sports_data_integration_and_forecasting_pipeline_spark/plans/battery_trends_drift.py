@@ -1029,8 +1029,8 @@ def kl_term_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # building a co-occurrence graph). This entry peels the 3-core of the
 # kNN-sparsified co-supply graph with FOUR unrolled rounds — a static
 # plan both engines express identically (the to-fixpoint variant is the
-# same loop with a convergence check + localCheckpoint, the
-# dedup_cluster_star discipline; four rounds converge on this graph and
+# same loop with a convergence check + localCheckpoint, as in
+# dedup.connected_components; four rounds converge on this graph and
 # the oracle stays SQL-expressible). Scale shape per round: one
 # map-side-combined degree aggregate + two semi-joins against the ≤|V|
 # survivor set — no pair enumeration beyond the already-capped kNN edge
@@ -1119,8 +1119,8 @@ def kcore_cosupply_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(und.select(F.col("b").alias("s"), F.col("a").alias("t")))
         # Each peel references sym TWICE (degree agg + the semi-joins),
         # so without truncation round r's lineage holds 2^r copies of
-        # the co-supply pair join — the dedup_cluster_star discipline
-        # (localCheckpoint per round) keeps every round's input a flat
+        # the co-supply pair join; a localCheckpoint per round (as in
+        # dedup.connected_components) keeps every round's input a flat
         # ≤|kept-edges| table instead.
         .localCheckpoint()
     )

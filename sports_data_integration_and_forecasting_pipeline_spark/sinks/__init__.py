@@ -9,6 +9,11 @@ of history prunable.
 
 from __future__ import annotations
 
+import errno
+import os
+import re
+import shutil
+import uuid
 from datetime import datetime
 from pathlib import Path
 
@@ -29,12 +34,24 @@ def save_snapshot(
     raises instead."""
     stamp = datetime.now().strftime("%Y%m%d_%H%M%S_%f")
     path = str(Path(out_dir) / f"odds_{markets}_{stamp}.{fmt}")
-    writer = df.write.mode("errorifexists")
+    _write(df.write.mode("errorifexists"), path, fmt)
+    return path
+
+
+def _write(writer, path: str, fmt: str) -> None:
+    """Finish ``writer`` at ``path`` in ``fmt``: CSV with a header row (the
+    reference's format) or parquet."""
     if fmt == "csv":
         writer.option("header", "true").csv(path)
     else:
         writer.parquet(path)
-    return path
+
+
+def _read(spark, path: str, fmt: str) -> DataFrame:
+    """Read what :func:`_write` wrote at ``path`` in ``fmt``."""
+    if fmt == "csv":
+        return spark.read.option("header", "true").csv(path)
+    return spark.read.parquet(path)
 
 
 _VERSION_FILE = "_VERSION"
@@ -57,8 +74,6 @@ def _write_pointer(root, version: str, fmt: str) -> None:
     manifest). Readers resolve the pointer once, then read an immutable
     version directory — they see the old or the new complete table, never
     a mix, and there is no window where the table doesn't exist."""
-    import os
-    import uuid
 
     tmp = root / f".{_VERSION_FILE}.tmp.{uuid.uuid4().hex[:8]}"
     tmp.write_text(f"{version}\n{fmt}\n")
@@ -67,15 +82,6 @@ def _write_pointer(root, version: str, fmt: str) -> None:
 
 class ConcurrentWriteError(RuntimeError):
     """Raised when a version commit detects a competing writer."""
-
-
-def _stage_path(root, next_name: str):
-    """Invisible (dot-prefixed, so skipped by Spark readers) per-attempt
-    staging directory for a version commit. A writer that dies mid-write
-    strands only staged debris — never a visible half-baked version."""
-    import uuid
-
-    return root / f".{next_name}.staged.{uuid.uuid4().hex[:8]}"
 
 
 def _publish_version(root, staged, next_name: str) -> None:
@@ -87,9 +93,6 @@ def _publish_version(root, staged, next_name: str) -> None:
     :class:`ConcurrentWriteError` raised); any other rename failure
     (EACCES, EIO, ENOSPC…) re-raises untouched WITH the staged data kept
     — a transient fault must not destroy a fully-written version."""
-    import errno
-    import os
-    import shutil
 
     target = root / next_name
     try:
@@ -120,11 +123,8 @@ def recover_canonical(canonical_path: str) -> list[str]:
     its pointer flip, so only an operator who knows no writer is running
     (the documented single-writer contract) may reclaim it. Returns the
     removed directory names."""
-    import re
-    import shutil
-    from pathlib import Path as P
 
-    root = P(canonical_path)
+    root = Path(canonical_path)
     ptr = _pointer(root)
     cur = int(ptr[0][1:]) if ptr else 0
     removed = []
@@ -144,7 +144,6 @@ def _prune_staged_debris(root) -> None:
     after a successful publish, at which point any remaining staged dir is
     either debris or a competitor that will fail loudly at its own
     publish/flip (single-writer is the documented deployment contract)."""
-    import shutil
 
     for child in root.iterdir():
         if child.is_dir() and ".staged." in child.name and child.name.startswith("."):
@@ -154,7 +153,7 @@ def _prune_staged_debris(root) -> None:
 def _commit_version(root, base_version: str | None, next_name: str, fmt: str) -> None:
     """Conditional pointer flip: verify the pointer still names the base
     version this commit was computed against, then flip. Together with
-    :func:`_claim_version` this turns lost-update races into loud
+    :func:`_publish_version` this turns lost-update races into loud
     failures. The check-then-replace pair is not itself atomic — true
     multi-writer mutual exclusion needs an external lock service (the same
     contract Delta documents for S3); single-writer-per-table remains the
@@ -168,6 +167,26 @@ def _commit_version(root, base_version: str | None, next_name: str, fmt: str) ->
             f"{cur_name!r} during commit; recompute against the new version"
         )
     _write_pointer(root, next_name, fmt)
+
+
+def _commit_next(root, base: tuple[str, str] | None, writer, fmt: str) -> int:
+    """Commit ``writer``'s output as the version after ``base``, the
+    pointer the caller read before computing it: staged write → atomic
+    rename claim (:func:`_publish_version`) → conditional pointer flip
+    against ``base`` (:func:`_commit_version`). Returns the committed
+    version number.
+
+    The staging directory is invisible (dot-prefixed, so skipped by Spark
+    readers) and unique per attempt: a writer that dies mid-write strands
+    only staged debris — never a visible half-baked version."""
+
+    version = (int(base[0][1:]) if base else 0) + 1
+    next_name = f"v{version:08d}"
+    staged = root / f".{next_name}.staged.{uuid.uuid4().hex[:8]}"
+    _write(writer, str(staged), fmt)
+    _publish_version(root, staged, next_name)
+    _commit_version(root, base[0] if base else None, next_name, fmt)
+    return version
 
 
 def _data_dir(root) -> tuple[str, str]:
@@ -189,9 +208,8 @@ def read_canonical(
     directories are immutable, so any still-retained version reads
     exactly as it was committed (``retain_previous`` on
     :func:`compact_canonical` controls how many stay)."""
-    from pathlib import Path as P
 
-    root = P(canonical_path)
+    root = Path(canonical_path)
     if version is None:
         path, fmt = _data_dir(root)
     else:
@@ -204,9 +222,7 @@ def read_canonical(
                 "(pruned by compaction or never written)"
             )
         path = str(vdir)
-    if fmt == "csv":
-        return spark.read.option("header", "true").csv(path)
-    return spark.read.parquet(path)
+    return _read(spark, path, fmt)
 
 
 def write_canonical_version(
@@ -222,24 +238,13 @@ def write_canonical_version(
     this is the writer half of schema evolution; superseded versions keep
     their original schema and stay readable via
     :func:`read_canonical_evolved`. Returns the committed version number."""
-    from pathlib import Path as P
 
-    root = P(canonical_path)
+    root = Path(canonical_path)
     root.mkdir(parents=True, exist_ok=True)
-    ptr = _pointer(root)
-    cur_ver = int(ptr[0][1:]) if ptr else 0
-    next_name = f"v{cur_ver + 1:08d}"
-    staged = _stage_path(root, next_name)
     writer = df.write.mode("overwrite")
     if partition_col is not None:
         writer = writer.partitionBy(partition_col)
-    if fmt == "csv":
-        writer.option("header", "true").csv(str(staged))
-    else:
-        writer.parquet(str(staged))
-    _publish_version(root, staged, next_name)
-    _commit_version(root, ptr[0] if ptr else None, next_name, fmt)
-    return cur_ver + 1
+    return _commit_next(root, _pointer(root), writer, fmt)
 
 
 def read_canonical_evolved(
@@ -262,7 +267,6 @@ def read_canonical_evolved(
     With ``version=None`` this is just the current table (cast_map still
     applied, so a reader can pin one schema across a fleet of mixed-age
     tables)."""
-    from pyspark.sql import functions as SF
 
     current = read_canonical(spark, canonical_path)
     target = current.schema
@@ -277,7 +281,7 @@ def read_canonical_evolved(
     for f in target.fields:
         tgt_type = cast_map.get(f.name, f.dataType.simpleString())
         if f.name not in old_types:
-            cols.append(SF.lit(None).cast(tgt_type).alias(f.name))
+            cols.append(F.lit(None).cast(tgt_type).alias(f.name))
             continue
         if old_types[f.name] != f.dataType.simpleString() and f.name not in cast_map:
             raise ValueError(
@@ -285,16 +289,15 @@ def read_canonical_evolved(
                 f"({old_types[f.name]} -> {f.dataType.simpleString()}); "
                 "declare the conversion in cast_map to read across the change"
             )
-        cols.append(SF.col(f.name).cast(tgt_type).alias(f.name))
+        cols.append(F.col(f.name).cast(tgt_type).alias(f.name))
     return df.select(*cols)
 
 
 def current_version(canonical_path: str) -> int | None:
     """The committed version number of a canonical table (None for a
     legacy flat table)."""
-    from pathlib import Path as P
 
-    ptr = _pointer(P(canonical_path))
+    ptr = _pointer(Path(canonical_path))
     return int(ptr[0][1:]) if ptr else None
 
 
@@ -319,39 +322,25 @@ def merge_canonical(
     in Delta's dynamic partition overwrite. Returns rows in the merged
     table.
     """
-    from pathlib import Path as P
 
-    from pyspark.sql import functions as SF
 
-    root = P(canonical_path)
+    root = Path(canonical_path)
     ptr = _pointer(root)
     cur_dir, fmt = _data_dir(root)
-    current = (
-        spark.read.option("header", "true").csv(cur_dir)
-        if fmt == "csv"
-        else spark.read.parquet(cur_dir)
-    )
+    current = _read(spark, cur_dir, fmt)
     up = updates
     if partition_col not in up.columns and "timestamp" in up.columns:
-        up = up.withColumn(partition_col, SF.to_date(SF.col("timestamp")))
+        up = up.withColumn(partition_col, F.to_date(F.col("timestamp")))
     up = up.select(*current.columns)  # align column order/set
     merged = current.join(up.select(*key_cols), key_cols, "left_anti").unionByName(up)
 
     n = merged.count()
-    cur_ver = int(ptr[0][1:]) if ptr else 0
-    next_name = f"v{cur_ver + 1:08d}"
-    staged = _stage_path(root, next_name)
     writer = (
-        merged.repartition(SF.col(partition_col))
+        merged.repartition(F.col(partition_col))
         .write.mode("overwrite")
         .partitionBy(partition_col)
     )
-    if fmt == "csv":
-        writer.option("header", "true").csv(str(staged))
-    else:
-        writer.parquet(str(staged))
-    _publish_version(root, staged, next_name)
-    _commit_version(root, ptr[0] if ptr else None, next_name, fmt)
+    _commit_next(root, ptr, writer, fmt)
     return n
 
 
@@ -372,9 +361,8 @@ def update_canonical_table(
     Compaction writes the next version and flips the pointer atomically
     (see :func:`compact_canonical`).
     """
-    from pathlib import Path as P
 
-    root = P(canonical_path)
+    root = Path(canonical_path)
     ptr = _pointer(root)
     if ptr is None and not root.exists():
         root.mkdir(parents=True, exist_ok=True)
@@ -386,10 +374,7 @@ def update_canonical_table(
         .write.mode("append")
         .partitionBy("snapshot_date")
     )
-    if cur_fmt == "csv":
-        out.option("header", "true").csv(path)
-    else:
-        out.parquet(path)
+    _write(out, path, cur_fmt)
     return canonical_path
 
 
@@ -417,23 +402,13 @@ def compact_canonical(
     tables (no pointer) are migrated to the versioned layout on first
     compaction. Returns the number of rows compacted.
     """
-    import re
-    import shutil
-    from pathlib import Path as P
 
-    root = P(canonical_path)
+    root = Path(canonical_path)
     ptr = _pointer(root)
     cur_dir, fmt = _data_dir(root)
-    df = (
-        spark.read.option("header", "true").csv(cur_dir)
-        if fmt == "csv"
-        else spark.read.parquet(cur_dir)
-    )
+    df = _read(spark, cur_dir, fmt)
     n = df.count()
 
-    cur_ver = int(ptr[0][1:]) if ptr else 0
-    next_name = f"v{cur_ver + 1:08d}"
-    staged = _stage_path(root, next_name)
     if target_files_per_partition > 1:
         # salt on a hash of the non-partition columns: up to n files per
         # date dir, co-located rows stay together. (Hash collisions can
@@ -453,13 +428,7 @@ def compact_canonical(
     else:
         compacted = df.repartition(F.col(partition_col))
     writer = compacted.write.mode("overwrite").partitionBy(partition_col)
-    if fmt == "csv":
-        writer.option("header", "true").csv(str(staged))
-    else:
-        writer.parquet(str(staged))
-
-    _publish_version(root, staged, next_name)  # atomic claim of vN+1
-    _commit_version(root, ptr[0] if ptr else None, next_name, fmt)  # conditional flip
+    _commit_next(root, ptr, writer, fmt)
     _prune_staged_debris(root)
 
     if ptr is None:
@@ -492,9 +461,5 @@ def compact_canonical(
 def export_report(df: DataFrame, path: str, fmt: str = "csv") -> str:
     """S7 report export (reference ``widgets_ui.py:119-121``, notebook
     cell 6)."""
-    writer = df.coalesce(1).write.mode("overwrite")
-    if fmt == "csv":
-        writer.option("header", "true").csv(path)
-    else:
-        writer.parquet(path)
+    _write(df.coalesce(1).write.mode("overwrite"), path, fmt)
     return path

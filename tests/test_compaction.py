@@ -9,11 +9,15 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
+
 from sports_data_integration_and_forecasting_pipeline_spark.sinks import (
     _pointer,
     compact_canonical,
+    merge_canonical,
     read_canonical,
     update_canonical_table,
+    write_canonical_version,
 )
 
 
@@ -84,13 +88,24 @@ def test_compact_crash_before_publish_preserves_table(spark, tmp_path):
     assert not stranded.exists()
 
 
-def test_concurrent_committer_fails_loudly_not_silently(spark, tmp_path):
+# Every writer of a new table version goes through the same commit.
+_COMMITTERS = {
+    "compact_canonical": lambda spark, path: compact_canonical(spark, path),
+    "merge_canonical": lambda spark, path: merge_canonical(
+        spark, _batch(spark), path, key_cols=["game_id"]
+    ),
+    "write_canonical_version": lambda spark, path: write_canonical_version(
+        spark, path, _batch(spark)
+    ),
+}
+
+
+@pytest.mark.parametrize("committer", sorted(_COMMITTERS))
+def test_concurrent_committer_fails_loudly_not_silently(spark, tmp_path, committer):
     """Writer mutual exclusion: if a competing committer publishes the same
     next version first, the second commit raises ConcurrentWriteError
     instead of silently discarding the first commit (its staged dir is
     cleaned up); the winner's data stays intact."""
-    import pytest
-
     from sports_data_integration_and_forecasting_pipeline_spark.sinks import ConcurrentWriteError
 
     path = str(tmp_path / "canonical.parquet")
@@ -104,7 +119,7 @@ def test_concurrent_committer_fails_loudly_not_silently(spark, tmp_path):
     (winner / "marker").write_text("winner's files")
 
     with pytest.raises(ConcurrentWriteError):
-        compact_canonical(spark, path)
+        _COMMITTERS[committer](spark, path)
     # loser did not clobber the winner's version dir
     assert (winner / "marker").read_text() == "winner's files"
     # no staged debris left behind by the failed attempt
@@ -192,8 +207,6 @@ def test_time_travel_reads(spark, tmp_path):
     ]
     assert old == v1_rows
 
-    import pytest
-
     compact_canonical(spark, path)  # -> v3, v1 pruned
     with pytest.raises(FileNotFoundError):
         read_canonical(spark, path, version=1)
@@ -231,8 +244,6 @@ def test_schema_evolution_reader_across_versions(spark, tmp_path):
     """read_canonical_evolved presents an old version under the current
     schema: added columns become typed NULLs, a declared widen casts, an
     undeclared type change raises."""
-    import pytest
-
     from sports_data_integration_and_forecasting_pipeline_spark.sinks import (
         read_canonical_evolved,
         write_canonical_version,
@@ -269,8 +280,6 @@ def test_recover_canonical_clears_wedged_unpointed_version(spark, tmp_path):
     flip strands a claimed-but-unpointed version dir that blocks every
     future commit; recover_canonical removes exactly that (plus staged
     debris), never the committed or retained versions."""
-    import pytest
-
     from sports_data_integration_and_forecasting_pipeline_spark.sinks import (
         ConcurrentWriteError,
         recover_canonical,
@@ -329,7 +338,6 @@ def test_save_snapshot_never_replaces_a_snapshot(spark, tmp_path, monkeypatch):
     keeps its rows."""
     from datetime import datetime
 
-    import pytest
     from pyspark.errors import AnalysisException
 
     from sports_data_integration_and_forecasting_pipeline_spark import sinks

@@ -231,31 +231,34 @@ def test_connected_components_hand_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 7: 1, 4: 4, 5: 4, 6: 6, 8: 8}
 
 
-def test_star_cc_matches_propagation_on_real_pairs(spark):
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-        simhash_pairs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    edges = simhash_pairs(docs, max_hamming=3).select("id_a", "id_b")
-    prop = {r["doc_id"]: r["cluster_id"] for r in connected_components(edges, docs).collect()}
-    star = {r["doc_id"]: r["cluster_id"] for r in connected_components_star(edges, docs).collect()}
-    assert star == prop and star
-
-
 def test_star_cc_converges_fast_on_a_long_chain(spark):
     from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
     )
 
     n = 64
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"])
-    # propagation would need ~n rounds on a 64-chain; star must finish in <= 8
-    out = connected_components_star(chain, nodes, max_iter=8).collect()
+    # without path compression a 64-chain needs ~n rounds; with it,
+    # min-label propagation finishes in 7
+    out = connected_components(chain, nodes, max_iter=8).collect()
     assert all(r["cluster_id"] == 0 for r in out) and len(out) == n
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """Running out of rounds is an error, not a partial labelling: a
+    1,024-chain needs 11 rounds, so three rounds must raise."""
+    import pytest
+
+    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
+        connected_components,
+    )
+
+    n = 1024
+    nodes = spark.range(n).withColumnRenamed("id", "doc_id")
+    chain = spark.range(n - 1).selectExpr("id AS id_a", "id + 1 AS id_b")
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        connected_components(chain, nodes, max_iter=3)
 
 
 def test_normalized_dedup_catches_case_punct_space_variants(spark):

@@ -18,7 +18,7 @@ from sports_data_integration_and_forecasting_pipeline_spark.operators.markets im
     best_odds_report,
     detect_arbitrage,
     detect_discrepancies,
-    find_best_odds_window,
+    find_best_odds,
 )
 from sports_data_integration_and_forecasting_pipeline_spark.operators.odds import (
     clean_odds,
@@ -62,7 +62,7 @@ def _rows(df):
 
 
 def _old_detect_discrepancies(df, market_key="h2h"):
-    best = find_best_odds_window(df.filter(F.col("market") == market_key)).select(
+    best = find_best_odds(df.filter(F.col("market") == market_key)).select(
         "game_id",
         "home_team",
         "away_team",
@@ -90,7 +90,7 @@ def _old_detect_discrepancies(df, market_key="h2h"):
 
 
 def _old_app_summary(cleaned):
-    best = find_best_odds_window(cleaned).select(
+    best = find_best_odds(cleaned).select(
         "game_id",
         "home_team",
         "away_team",
@@ -105,7 +105,7 @@ def _old_app_summary(cleaned):
 
 
 def _old_best_odds_report(cleaned):
-    best = find_best_odds_window(cleaned)
+    best = find_best_odds(cleaned)
     summary = best.groupBy("game_id").agg(
         F.sum("implied_prob").alias("sum_best_implied"),
         F.array_join(F.array_sort(F.collect_set("outcome")), ", ").alias(

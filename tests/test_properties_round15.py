@@ -66,13 +66,13 @@ def test_connected_components_materializes_edge_list_once(spark, monkeypatch):
     from sports_data_integration_and_forecasting_pipeline_spark.operators import dedup
 
     persisted: list[tuple[str, tuple[str, ...]]] = []
-    orig = dedup._persist_scoped
+    orig = dedup.persist_scoped
 
     def recording(role, df):
         persisted.append((role, tuple(df.columns)))
         return orig(role, df)
 
-    monkeypatch.setattr(dedup, "_persist_scoped", recording)
+    monkeypatch.setattr(dedup, "persist_scoped", recording)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )

@@ -15,7 +15,7 @@ from sports_data_integration_and_forecasting_pipeline_spark.operators.flatten im
 from sports_data_integration_and_forecasting_pipeline_spark.operators.markets import (
     detect_arbitrage,
     detect_discrepancies,
-    find_best_odds_window,
+    find_best_odds,
 )
 from sports_data_integration_and_forecasting_pipeline_spark.operators.odds import (
     clean_odds,
@@ -72,7 +72,7 @@ def test_clean_odds_pipeline_adds_probabilities(sample_games):
 
 def test_analysis_detects_arbitrage(sample_games):
     df = flatten_odds_to_df(sample_games, market="h2h")
-    best = find_best_odds_window(df)
+    best = find_best_odds(df)
     margins = {
         r["game_id"]: r["arbitrage_margin"]
         for r in detect_arbitrage(best).collect()

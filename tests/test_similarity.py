@@ -89,50 +89,6 @@ def test_cosine_dup_pairs_lsh_bucketed(spark):
     assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 2)}
 
 
-def test_cosine_dup_pairs_blocked_matches_exact(spark):
-    """The BLAS blocked-matmul baseline (driver-bounded, documented exact
-    path) must agree pair-for-pair and value-for-value with the
-    sequential-fold exact variant after engine-identical rounding."""
-    from pyspark.sql import functions as F
-
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.similarity import (
-        cosine_dup_pairs_blocked,
-    )
-
-    def _r6(c):
-        return F.floor(c.cast("double") * 1e6 + 0.5) / 1e6
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    blocked = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in cosine_dup_pairs_blocked(emb, threshold=0.35, round_dp=6).collect()
-    }
-    exact = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in cosine_dup_pairs(emb, threshold=0.35, round_expr=_r6).collect()
-    }
-    assert blocked == exact and len(blocked) > 0
-
-
-def test_cosine_dup_pairs_blocked_enforces_collect_bound(spark):
-    """r7 (VERDICT r6 task 2): the dense baseline's driver-collect bound
-    is enforced, not just documented — an over-bound embeddings frame
-    raises loudly (naming the LSH path) instead of collecting."""
-    import pytest
-
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.similarity import (
-        DENSE_COLLECT_MAX_ROWS,
-        cosine_dup_pairs_blocked,
-    )
-
-    big = spark.range(DENSE_COLLECT_MAX_ROWS + 1).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"),
-    )
-    with pytest.raises(AssertionError, match="dense-collect precondition"):
-        cosine_dup_pairs_blocked(big)
-
-
 def test_cosine_dup_pairs_bucketed_subset_of_exact(spark):
     """The LSH-bucketed scale path returns a subset of the exact pair set
     (same values on the pairs it does return)."""
