@@ -302,8 +302,6 @@ def mmr_rerank_topk(
     # one job, no driver data moves, no predicate growth, degrades to
     # an empty result on an empty query set, and parallelizes across
     # queries — lazy like every other operator (consumers trigger it).
-    import pandas as pd  # noqa: PLC0415
-
     from pyspark.sql.types import (  # noqa: PLC0415
         IntegerType,
         LongType,
@@ -320,52 +318,65 @@ def mmr_rerank_topk(
             StructField("score_e7", LongType(), True),
         ]
     )
-    kk, ln = k, lam_num
-
-    def _greedy(key, cand_pdf, sims_pdf):  # noqa: ANN001, ANN202
-        if cand_pdf.empty:
-            return pd.DataFrame(
-                columns=["q_id", "mmr_rank", "cand_id", "score_e7"]
-            )
-        qid = key[0]
-        # ids stay native (any orderable/hashable type); the SCORE
-        # arithmetic is forced to Python ints so it is exact and
-        # overflow-free regardless of the Arrow dtype
-        rel = {
-            c: int(r)
-            for c, r in zip(cand_pdf["cand_id"], cand_pdf["rel_e6"])
-        }
-        sim = {
-            (x, y): int(s)
-            for x, y, s in zip(
-                sims_pdf["ca"], sims_pdf["cb"], sims_pdf["sim_e6"]
-            )
-        }
-        # round 1: pure-relevance argmax, ties to the lower cand_id
-        first = min(rel, key=lambda c: (-rel[c], c))
-        picks = [(qid, 1, first, ln * rel[first])]
-        selected = [first]
-        unsel = sorted(c for c in rel if c != first)
-        for r in range(2, kk + 1):
-            if not unsel:
-                break
-            best_c = best_s = None
-            for c in unsel:
-                mx = max(sim[(c, s)] for s in selected)
-                sc = ln * rel[c] - mu * mx
-                if best_c is None or sc > best_s or (
-                    sc == best_s and c < best_c
-                ):
-                    best_c, best_s = c, sc
-            picks.append((qid, r, best_c, best_s))
-            selected.append(best_c)
-            unsel.remove(best_c)
-        return pd.DataFrame(
-            picks, columns=["q_id", "mmr_rank", "cand_id", "score_e7"]
-        )
-
     return (
         cand.groupBy("q_id")
         .cogroup(sims.groupBy("__qg"))
-        .applyInPandas(_greedy, schema=out_schema)
+        .applyInPandas(
+            lambda key, c, sm: mmr_greedy(key, c, sm, k, lam_num, mu),
+            schema=out_schema,
+        )
     )
+
+
+def mmr_greedy(key, cand_pdf, sims_pdf, k: int, lam_num: int, mu: int):  # noqa: ANN001, ANN201
+    """The per-query MMR greedy kernel of :func:`mmr_rerank_topk`, run
+    once per ``q_id`` group of the cogrouped Arrow pass.
+
+    ``cand_pdf`` holds the query's candidates ``(cand_id, rel_e6)`` and
+    ``sims_pdf`` their ordered pairwise similarities ``(ca, cb, sim_e6)``;
+    ``mu = lam_den − lam_num``. Picks ``k`` candidates scoring
+    ``lam_num·rel_e6 − mu·max_sim_e6`` over exact Python ints (ties to the
+    lower ``cand_id``; the first pick is the pure-relevance argmax) and
+    returns ``(q_id, mmr_rank, cand_id, score_e7)`` rows.
+
+    Every ordered pair of distinct candidates must be in ``sims_pdf``: a
+    missing pair raises ``ValueError`` naming the query and the pair,
+    rather than scoring the candidate against an incomplete maximum."""
+    import pandas as pd  # noqa: PLC0415
+
+    cols = ["q_id", "mmr_rank", "cand_id", "score_e7"]
+    if cand_pdf.empty:
+        return pd.DataFrame(columns=cols)
+    qid = key[0]
+    # ids stay native (any orderable/hashable type); the SCORE
+    # arithmetic is forced to Python ints so it is exact and
+    # overflow-free regardless of the Arrow dtype
+    rel = {c: int(r) for c, r in zip(cand_pdf["cand_id"], cand_pdf["rel_e6"])}
+    sim = {
+        (x, y): int(s)
+        for x, y, s in zip(sims_pdf["ca"], sims_pdf["cb"], sims_pdf["sim_e6"])
+    }
+    # round 1: pure-relevance argmax, ties to the lower cand_id
+    first = min(rel, key=lambda c: (-rel[c], c))
+    picks = [(qid, 1, first, lam_num * rel[first])]
+    selected = [first]
+    unsel = sorted(c for c in rel if c != first)
+    for r in range(2, k + 1):
+        if not unsel:
+            break
+        best_c = best_s = None
+        for c in unsel:
+            try:
+                mx = max(sim[(c, s)] for s in selected)
+            except KeyError as e:
+                raise ValueError(
+                    f"mmr_greedy: q_id {qid!r} has no similarity for "
+                    f"candidate pair {e.args[0]!r}"
+                ) from None
+            sc = lam_num * rel[c] - mu * mx
+            if best_c is None or sc > best_s or (sc == best_s and c < best_c):
+                best_c, best_s = c, sc
+        picks.append((qid, r, best_c, best_s))
+        selected.append(best_c)
+        unsel.remove(best_c)
+    return pd.DataFrame(picks, columns=cols)

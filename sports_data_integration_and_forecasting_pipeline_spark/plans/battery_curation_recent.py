@@ -800,8 +800,8 @@ def _register_curation_v6() -> None:
         # the three downstream consumers (waterfill counts, cap fill,
         # dedup-kept rollup) read a flat scan instead of reprinting the
         # gate+pair-join lineage under every reference (261 textual
-        # exchanges without it, ~30 with). Eager — the entry sits in
-        # bench.py's BUILDER_DOES_CLUSTER_WORK so the timer pays it.
+        # exchanges without it, ~30 with). Eager — it runs inside fn(),
+        # which bench.py times with the action for every entry.
         surv = g.join(dropped, "doc_id", "left_anti").select(
             "doc_id",
             "lang",

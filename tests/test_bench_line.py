@@ -7,8 +7,9 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bench import compact_bench_line
 
@@ -147,16 +148,71 @@ def test_window_priority_names_valid_and_sized():
     assert not missing, missing
 
 
-def test_headline_names_valid():
-    """Every bench HEADLINE name must be a registered entry (a rename
-    would silently drop it from the timed set via QUERIES.get)."""
-    from bench import BUILDER_DOES_CLUSTER_WORK, HEADLINE
+REJOINED = {
+    "dedup_cluster_assign",
+    "dedup_cluster_star",
+    "dedup_cluster_size_histogram",
+    "dedup_cluster_soft_weights",
+    "leakage_safe_split",
+    "kcore_cosupply_peel",
+    "pagerank_customer_supplier",
+    "hierarchy_root_depth",
+    "recursive_cte_walk",
+    "forecast_random_forest",
+    "dedup_shingle_jaccard_all",
+}
+
+
+def test_bench_times_every_non_streaming_entry():
+    """The timed set is derived from the registry, not listed: every
+    registered entry except the streaming ones, in registry order, so
+    the iterative entries once left out of a hand-kept list are timed."""
+    from bench import timed_names
     from sports_data_integration_and_forecasting_pipeline_spark.plans.battery import QUERIES
 
-    missing = [n for n in HEADLINE if n not in QUERIES]
-    assert not missing, missing
-    assert len(set(HEADLINE)) == len(HEADLINE)
-    assert BUILDER_DOES_CLUSTER_WORK <= set(QUERIES)
+    names = timed_names(QUERIES)
+    assert names == [n for n in QUERIES if not n.startswith("streaming_")]
+    assert REJOINED <= set(names)
+
+
+def test_time_entry_counts_the_builder(spark):
+    """A builder's own work is timed: a spec whose fn() sleeps 0.2 s
+    reports fn_s >= 0.2, and the entry's bench seconds include it."""
+    import time
+    from types import SimpleNamespace
+
+    from bench import bench_entry, time_entry
+
+    def slow_builder(spark, sf_dir):
+        time.sleep(0.2)
+        return spark.range(10)
+
+    spec = SimpleNamespace(fn=slow_builder)
+    fn_s, _ = time_entry(spark, spec, "unused")
+    assert fn_s >= 0.2
+    seconds, kept_fn_s = bench_entry(spark, spec, "unused")
+    assert kept_fn_s >= 0.2
+    assert seconds >= kept_fn_s
+
+
+def test_queries_fn_rides_the_full_line_only():
+    """Builder seconds go to the full line; the compact stdout line keeps
+    exactly the keys it had before builders were timed."""
+    from bench import bench_lines
+
+    timings = _fake_timings(250)
+    builder = {k: round(v / 3, 3) for k, v in timings.items()}
+    corrected = {k: round(v * 0.9, 3) for k, v in timings.items()}
+    full, compact = bench_lines(BASE, timings, builder, corrected)
+    assert json.loads(full)["queries_fn"] == builder
+    assert set(json.loads(compact)) == set(BASE) | {
+        "queries",
+        "queries_omitted",
+        "queries_omitted_sec",
+        "queries_drift_corrected",
+        "queries_omitted_corrected_sec",
+    }
+    assert compact == compact_bench_line(BASE, timings, corrected=corrected)
 
 
 def test_drift_corrected_interpolates_to_start_speed():

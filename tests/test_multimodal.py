@@ -151,10 +151,12 @@ def test_arrow_udf_entries_run_from_foreign_cwd():
     import os
     import subprocess
     import sys
+    from pathlib import Path
 
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    repo = str(Path(__file__).resolve().parents[1])
     script = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {repo!r})\n"
         "from sports_data_integration_and_forecasting_pipeline_spark.session import get_spark\n"
         "from sports_data_integration_and_forecasting_pipeline_spark.plans import QUERIES\n"
         "spark = get_spark(master='local[2]', shuffle_partitions=2)\n"

@@ -190,3 +190,53 @@ def test_mmr_guards(spark):
         mmr_rerank_topk(df, F.col("vec_id") == 0, lam_num=0)
     with pytest.raises(ValueError, match="k .* must be <= n_cand"):
         mmr_rerank_topk(df, F.col("vec_id") == 0, n_cand=3, k=5)
+
+
+def _kernel_frames(rel, sims):
+    import pandas as pd
+
+    cand = pd.DataFrame(
+        {"cand_id": list(rel), "rel_e6": list(rel.values())}
+    )
+    sm = pd.DataFrame(
+        [(a, b, s) for (a, b), s in sims.items()],
+        columns=["ca", "cb", "sim_e6"],
+    )
+    return cand, sm
+
+
+def test_mmr_greedy_single_candidate():
+    """n_cand=1: one candidate and no pairs. k=1 picks it on relevance
+    alone; a larger k stops when the candidates run out."""
+    from sports_data_integration_and_forecasting_pipeline_spark.operators.retrieval import (
+        mmr_greedy,
+    )
+
+    cand, sm = _kernel_frames({5: 900_000}, {})
+    for k in (1, 3):
+        out = mmr_greedy((7,), cand, sm, k, 7, 3)
+        assert out.values.tolist() == [[7, 1, 5, 6_300_000]]
+
+
+def test_mmr_greedy_missing_pair_raises():
+    """The kernel matches the reference model on a complete pair frame,
+    and a frame missing one ordered pair raises ValueError naming the
+    query and the pair instead of a bare KeyError."""
+    from sports_data_integration_and_forecasting_pipeline_spark.operators.retrieval import (
+        mmr_greedy,
+    )
+
+    rel = {1: 990_000, 2: 985_000, 3: 700_000, 4: 600_000}
+    sims = {
+        (a, b): 400_000 + 100_000 * (a + b) % 500_000
+        for a in rel
+        for b in rel
+        if a != b
+    }
+    out = mmr_greedy((0,), *_kernel_frames(rel, sims), 3, 7, 3)
+    got = [(r, c, s) for _, r, c, s in out.itertuples(index=False)]
+    assert got == _mmr_model(rel, sims, 3)
+
+    del sims[(2, 1)]
+    with pytest.raises(ValueError, match=r"q_id 0 .*pair \(2, 1\)"):
+        mmr_greedy((0,), *_kernel_frames(rel, sims), 3, 7, 3)

@@ -8,6 +8,11 @@ protocol (VERDICT r10 task 5: cross-round per-query diffs compare the
 corrected column, so a host that drifts mid-run can't manufacture
 one-sided "regressions" in late-battery entries).
 
+A prior line without ``queries_fn`` predates builder timing (most of its
+entries were timed action-only), so it is compared against the current
+run's action-only seconds, ``queries - queries_fn``, raw on both sides;
+the header line says so.
+
 Usage: python tools/bench_compare.py [prior.json] [current.json]
 Defaults: BENCH_r<latest>.json vs BENCH.local.json.
 
@@ -64,16 +69,28 @@ def main() -> int:
     # column (stdout budget); the per-round BENCH_local_r{N}.json
     # archive (r11 verdict task 3) carries it — pass that as the prior
     # when it exists.
-    q_prior = prior.get("queries_drift_corrected") or prior.get("queries") or {}
-    q_cur = cur.get("queries_drift_corrected") or cur.get("queries") or {}
-    prior_corrected = "queries_drift_corrected" in prior
-    used_corrected = "queries_drift_corrected" in cur
+    if "queries_fn" in cur and "queries_fn" not in prior:
+        # A prior without queries_fn predates builder timing: most of its
+        # entries were timed action-only, so compare it against the
+        # current action-only seconds, raw on both sides.
+        q_prior = prior.get("queries") or {}
+        q_cur = {
+            k: round(v - cur["queries_fn"].get(k, 0.0), 3)
+            for k, v in cur["queries"].items()
+        }
+        prior_col = "RAW"
+        cur_col = "RAW action-only = queries - queries_fn"
+    else:
+        q_prior = prior.get("queries_drift_corrected") or prior.get("queries") or {}
+        q_cur = cur.get("queries_drift_corrected") or cur.get("queries") or {}
+        prior_col = "corrected" if "queries_drift_corrected" in prior else "RAW"
+        cur_col = "corrected" if "queries_drift_corrected" in cur else "RAW"
     common = [k for k in q_cur if k in q_prior and q_prior[k] >= FLOOR]
     print(
         f"prior={prior_path.name} total={prior.get('value')} "
-        f"({'corrected' if prior_corrected else 'RAW'} column) | "
+        f"({prior_col} column) | "
         f"current={cur_path.name} total={cur.get('value')} "
-        f"({'corrected' if used_corrected else 'RAW'} column) | "
+        f"({cur_col} column) | "
         f"common>={FLOOR}s: {len(common)}"
     )
     if prior.get("calib_drift_flag") or cur.get("calib_drift_flag"):

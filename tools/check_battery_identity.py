@@ -10,8 +10,9 @@ from __future__ import annotations
 import hashlib
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from sports_data_integration_and_forecasting_pipeline_spark.plans.battery import (  # noqa: E402
     QUERIES,

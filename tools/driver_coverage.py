@@ -17,8 +17,10 @@ import glob
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 
 def main() -> int:
@@ -26,7 +28,7 @@ def main() -> int:
 
     history: dict[str, list[int]] = {n: [] for n in QUERIES}
     unknown: dict[str, list[int]] = {}
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
         m = re.search(r"_r(\d+)\.json$", f)
         rnd = int(m.group(1)) if m else -1
         for name, row in json.load(open(f)).items():

@@ -10,8 +10,10 @@ Run: python tools/gen_explains.py
 
 import io
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 from contextlib import redirect_stdout
 
 from sports_data_integration_and_forecasting_pipeline_spark.plans.battery import QUERIES
@@ -112,5 +114,5 @@ for name in QUERIES:
     plan = buf.getvalue()
     tree = plan.split("\n\n")[0]
     out.append(f"## {name}\n\n{note}\n\n```\n{tree}\n```\n")
-open("/root/repo/EXPLAINS.md", "w").write("\n".join(out))
+open(REPO / "EXPLAINS.md", "w").write("\n".join(out))
 print("wrote EXPLAINS.md", len("\n".join(out)), "chars,", len(out) - 7, "plans")

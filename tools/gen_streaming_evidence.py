@@ -17,8 +17,10 @@ Run: python tools/gen_streaming_evidence.py
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -160,7 +162,7 @@ correctness drain at sf0.01 instead. What to read:
             name, "OK", summary.get("micro_batches"), "batches",
             "plan" if cap.plan else "NO-PLAN", flush=True,
         )
-    with open("/root/repo/STREAMING_EVIDENCE.md", "w") as f:
+    with open(REPO / "STREAMING_EVIDENCE.md", "w") as f:
         f.write("\n".join(out))
     print("wrote STREAMING_EVIDENCE.md")
     spark.stop()

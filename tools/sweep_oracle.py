@@ -5,18 +5,20 @@ it rotates into the 50-slot driver window).
 
 Usage: python tools/sweep_oracle.py [sf_dir] name [name ...]
 
-Env knobs (r15, for the above-gate-scale sf1 sweep — VERDICT r14
-task 1): SWEEP_CPUS (local[N] threads, default 8), SWEEP_SHUFFLE
-(shuffle partitions, default 16), SWEEP_TIME=1 (append per-entry
-wall seconds, Spark-side and oracle-side, to each line).
+Each line ends with the entry's wall seconds: total, and the
+oracle-side part for oracle-checked entries.
+
+Env knobs (for the above-gate-scale sf1 sweep): SWEEP_CPUS (local[N]
+threads, default 8), SWEEP_SHUFFLE (shuffle partitions, default 16).
 """
 from __future__ import annotations
 
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from sports_data_integration_and_forecasting_pipeline_spark.plans import QUERIES  # noqa: E402
 from sports_data_integration_and_forecasting_pipeline_spark.session import get_spark  # noqa: E402
@@ -29,7 +31,6 @@ def main() -> int:
     names = args or sorted(QUERIES)
     cpus = int(os.environ.get("SWEEP_CPUS", "8"))
     shuffle = int(os.environ.get("SWEEP_SHUFFLE", "16"))
-    timed = os.environ.get("SWEEP_TIME") == "1"
     spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=shuffle)
     con = duckdb_con(sf)
     bad = 0
@@ -40,19 +41,18 @@ def main() -> int:
             got = spec.fn(spark, sf)
             if spec.oracle is None:
                 n = got.count()
-                suffix = f"  [{time.monotonic() - t0:.1f}s]" if timed else ""
-                print(f"{name}: rows-only ({n} rows){suffix}", flush=True)
+                print(
+                    f"{name}: rows-only ({n} rows)  "
+                    f"[{time.monotonic() - t0:.1f}s]",
+                    flush=True,
+                )
                 continue
             got_pdf_t0 = time.monotonic()
             oracle_pdf = con.sql(spec.oracle).df()
             t_oracle = time.monotonic() - got_pdf_t0
             problems = compare(got, oracle_pdf)
             t_all = time.monotonic() - t0
-            suffix = (
-                f"  [{t_all:.1f}s total, {t_oracle:.1f}s oracle]"
-                if timed
-                else ""
-            )
+            suffix = f"  [{t_all:.1f}s total, {t_oracle:.1f}s oracle]"
             if problems:
                 bad += 1
                 print(f"{name}: FAIL {problems}{suffix}", flush=True)
