@@ -11,7 +11,11 @@ from __future__ import annotations
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.feature import VectorAssembler
-from pyspark.ml.regression import LinearRegression, RandomForestRegressor
+from pyspark.ml.regression import (
+    LinearRegression,
+    RandomForestRegressionModel,
+    RandomForestRegressor,
+)
 from pyspark.sql import DataFrame
 
 DEFAULT_FEATURES = (
@@ -19,6 +23,23 @@ DEFAULT_FEATURES = (
     "rebounds_rolling_avg",
     "assists_rolling_avg",
 )
+
+
+# PySpark declares ``RandomForestRegressionModel.trees`` a
+# ``cached_property``, and ``Params.params`` (read by ``_resetUid`` as every
+# fitted model is wrapped) evaluates each attribute that is not a plain
+# ``property``: every fit built 100 ``DecisionTreeRegressionModel``
+# wrappers, each discovering its params over py4j (~7,000 py4j commands
+# per fit instead of ~400). A plain ``property`` is skipped there and
+# builds the trees only when asked. Drop these two classes once PySpark's
+# ``params`` skips ``cached_property`` too.
+class _LazyTreesForestModel(RandomForestRegressionModel):
+    trees = property(RandomForestRegressionModel.trees.func)
+
+
+class _LazyTreesForest(RandomForestRegressor):
+    def _create_model(self, java_model) -> _LazyTreesForestModel:
+        return _LazyTreesForestModel(java_model)
 
 
 def train_model(
@@ -35,7 +56,7 @@ def train_model(
     if model_type == "linear":
         est = LinearRegression(featuresCol="features", labelCol=label_col)
     elif model_type == "forest":
-        est = RandomForestRegressor(
+        est = _LazyTreesForest(
             featuresCol="features", labelCol=label_col, numTrees=100, seed=42
         )
     else:

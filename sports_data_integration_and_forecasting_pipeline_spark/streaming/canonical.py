@@ -62,6 +62,21 @@ def with_event_time(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
     return df.withColumn("event_ts", F.to_timestamp(F.col(ts_col)))
 
 
+def _event_time_watermarked(df: DataFrame, delay: str) -> DataFrame:
+    """``df`` with a watermark on ``event_ts``. One already there is kept
+    (``delay`` is then unused): Spark refuses to redefine a watermark,
+    and keeping it lets ``detect_line_moves(dedup_line_changes(s))`` run
+    as one query. The column's watermark metadata alone can be stale (a
+    schema copied from a watermarked stream carries it), so the plan
+    must hold a watermark node too."""
+    if (
+        "spark.watermarkDelayMs" in df.schema["event_ts"].metadata
+        and "EventTimeWatermark" in df._jdf.queryExecution().logical().toString()
+    ):
+        return df
+    return df.withWatermark("event_ts", delay)
+
+
 def dedup_line_changes(
     df: DataFrame,
     watermark: str = "30 minutes",
@@ -70,7 +85,7 @@ def dedup_line_changes(
     """Drop replayed line-change rows within the watermark horizon. State
     per distinct key only — bounded by watermark, safe on unbounded
     streams."""
-    return df.withWatermark("event_ts", watermark).dropDuplicatesWithinWatermark(
+    return _event_time_watermarked(df, watermark).dropDuplicatesWithinWatermark(
         list(keys)
     )
 
@@ -221,7 +236,7 @@ def detect_line_moves(
     distributed; per-key state is a single double.
     """
     return (
-        df.withWatermark("event_ts", watermark)
+        _event_time_watermarked(df, watermark)
         .groupBy(*LINE_KEY)
         .applyInPandasWithState(
             _move_fn(min_move_pct),

@@ -6,46 +6,80 @@ local[4]/4 shuffle partitions), so the battery's rows-only entry gets a
 real value check here: a pinned md5 of the rounded predictions that
 fails on any drift, plus model-free invariants (RF predictions are
 averages of training labels, hence bounded by the label range).
+
+Every test here reads one module-scoped run of the battery entry, which
+fits the 100-tree forest once through ``train_model``.
 """
 
 from __future__ import annotations
 
 import hashlib
+from types import SimpleNamespace
 
+import pytest
 from pyspark.sql import functions as F
 
+from sports_data_integration_and_forecasting_pipeline_spark import forecast
 from sports_data_integration_and_forecasting_pipeline_spark.plans.battery import QUERIES
 
 from .conftest import TESTDATA_SMOKE
+from .py4j_budget import py4j_method_calls
 
 # md5 over "event_id:prediction(4dp)" sorted by event_id, sf0.001,
 # local[4] / 4 shuffle partitions (the session fixture's config).
 RF_PINNED_MD5 = "6e5a6fe82ec356e044fe8d14e38e54fd"
 
+# py4j method calls of one forest fit: 111 when measured, 1,933 while
+# every fit also wrapped the 100 trees in Python.
+FOREST_FIT_PY4J_CALLS_MAX = 150
 
-def _rf_rows(spark):
-    df = QUERIES["forecast_random_forest"].fn(spark, TESTDATA_SMOKE)
-    return sorted((r["event_id"], r["prediction"]) for r in df.collect())
+
+@pytest.fixture(scope="module")
+def rf(spark):
+    """The battery entry's sorted (event_id, prediction) rows, plus the
+    fitted model and the py4j method calls its fit sent."""
+    out = SimpleNamespace()
+    train_model = forecast.train_model
+
+    def counted_train_model(*args, **kwargs):
+        with py4j_method_calls() as n:
+            out.model = train_model(*args, **kwargs)
+        out.fit_calls = n.calls
+        return out.model
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(forecast, "train_model", counted_train_model)
+        df = QUERIES["forecast_random_forest"].fn(spark, TESTDATA_SMOKE)
+    out.rows = sorted((r["event_id"], r["prediction"]) for r in df.collect())
+    return out
 
 
-def test_rf_predictions_pinned_hash(spark):
-    rows = _rf_rows(spark)
-    payload = ";".join(f"{eid}:{p:.4f}" for eid, p in rows)
+def test_rf_predictions_pinned_hash(rf):
+    payload = ";".join(f"{eid}:{p:.4f}" for eid, p in rf.rows)
     assert hashlib.md5(payload.encode()).hexdigest() == RF_PINNED_MD5, (
         "seeded RF predictions drifted — if the change is intentional "
         "(MLlib upgrade, feature change), re-pin the hash"
     )
 
 
-def test_rf_predictions_within_label_range(spark):
+def test_rf_predictions_within_label_range(spark, rf):
     # RF regression predictions are averages of training-label subsets,
     # so every prediction must lie inside [min(label), max(label)].
     ev = spark.read.parquet(f"{TESTDATA_SMOKE}/events.parquet")
     lo, hi = ev.select(F.min("value"), F.max("value")).first()
-    rows = _rf_rows(spark)
-    assert len(rows) == ev.count()  # scored over every event row
-    preds = [p for _, p in rows]
+    assert len(rf.rows) == ev.count()  # scored over every event row
+    preds = [p for _, p in rf.rows]
     assert lo <= min(preds) and max(preds) <= hi
     # non-degenerate: the forest actually discriminates between rows
     # (default maxDepth=5 over 1000 rows yields ~32 distinct leaves)
     assert len(set(preds)) > 10
+
+
+def test_forest_trees_built_only_when_asked(rf):
+    forest = rf.model.stages[-1]
+    assert "trees" not in vars(forest)
+    assert len(forest.trees) == 100
+
+
+def test_forest_fit_py4j_budget(rf):
+    assert rf.fit_calls <= FOREST_FIT_PY4J_CALLS_MAX

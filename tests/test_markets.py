@@ -14,6 +14,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from sports_data_integration_and_forecasting_pipeline_spark.app import app_summary
+from sports_data_integration_and_forecasting_pipeline_spark.operators.ev import (
+    enrich_dataframe,
+    high_ev_view,
+)
 from sports_data_integration_and_forecasting_pipeline_spark.operators.markets import (
     best_odds_report,
     detect_arbitrage,
@@ -21,8 +25,22 @@ from sports_data_integration_and_forecasting_pipeline_spark.operators.markets im
     find_best_odds,
 )
 from sports_data_integration_and_forecasting_pipeline_spark.operators.odds import (
+    add_true_probabilities,
     clean_odds,
+    standardize_odds,
 )
+from sports_data_integration_and_forecasting_pipeline_spark.sources.readers import (
+    read_odds_json,
+)
+
+from .conftest import SAMPLE_ODDS_JSON
+from .py4j_budget import py4j_method_calls
+
+# py4j method calls to plan one odds op (both reads, the V1 arbitrage
+# scan and the V2 EV chain, no action) on the sample fixture: 556 when
+# measured, after the plans were cut to one scan and PySpark's per-Column
+# call-site capture was turned off.
+ODDS_PLAN_PY4J_CALLS_MAX = 556
 
 _SCHEMA = (
     "game_id string, home_team string, away_team string, bookmaker string, "
@@ -163,3 +181,19 @@ def test_golden_fixture_matches_join_form(sample_games):
     assert _rows(app_summary(cleaned)) == _rows(_old_app_summary(cleaned))
     margins = {r.arbitrage_margin for r in detect_discrepancies(cleaned).collect()}
     assert margins == {3.26, None}
+
+
+def _plan_odds_op(spark):
+    games = read_odds_json(spark, str(SAMPLE_ODDS_JSON))
+    detect_discrepancies(clean_odds(games, "h2h"), "h2h")
+    games = read_odds_json(spark, str(SAMPLE_ODDS_JSON))
+    std = standardize_odds(games, ["h2h", "spreads", "totals"])
+    high_ev_view(enrich_dataframe(add_true_probabilities(std)))
+
+
+def test_odds_op_planning_py4j_budget(spark):
+    # the first planning in a session sends a few one-off calls
+    _plan_odds_op(spark)
+    with py4j_method_calls() as n:
+        _plan_odds_op(spark)
+    assert n.calls <= ODDS_PLAN_PY4J_CALLS_MAX

@@ -118,6 +118,38 @@ def test_detect_line_moves_stateful(spark, snapshot_dir):
     assert abs(r["move_pct"] - 10.0) < 1e-9
 
 
+def test_line_moves_chained_after_dedup(spark, snapshot_dir, tmp_path):
+    # dedup_line_changes sets the event_ts watermark; detect_line_moves
+    # keeps it instead of redefining it, so the two chain in one query
+    def stream():
+        return with_event_time(
+            read_snapshot_stream(spark, snapshot_dir, max_files_per_trigger=1)
+        )
+
+    chained = _sink("chained")
+    run_available_now(detect_line_moves(dedup_line_changes(stream())), chained)
+
+    # two-step form: the deduped stream lands in parquet, then a second
+    # query detects moves over it
+    deduped = dedup_line_changes(stream())
+    out, ckpt = str(tmp_path / "deduped"), str(tmp_path / "ckpt")
+    deduped.writeStream.format("parquet").option("path", out).option(
+        "checkpointLocation", ckpt
+    ).trigger(availableNow=True).start().awaitTermination()
+    # the copied schema carries the watermark metadata but the re-read
+    # stream has no watermark: detect_line_moves must set its own
+    moves_df = detect_line_moves(spark.readStream.schema(deduped.schema).parquet(out))
+    assert "EventTimeWatermark" in moves_df._jdf.queryExecution().logical().toString()
+    two_step = _sink("two_step")
+    run_available_now(moves_df, two_step)
+
+    def moves(name):
+        return sorted(tuple(r) for r in spark.table(name).collect())
+
+    assert moves(chained) == moves(two_step)
+    assert len(moves(chained)) == 1
+
+
 def test_canonical_stream_sink(spark, snapshot_dir, tmp_path):
     from sports_data_integration_and_forecasting_pipeline_spark.streaming import write_canonical_stream
 
