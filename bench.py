@@ -39,7 +39,7 @@ def time_entry(spark, spec, sf_dir: str) -> tuple[float, float]:
     builder ``spec.fn()``, then the noop-sink action. The entry's scoped
     caches are dropped afterwards, so the next run (or entry) starts
     without a predecessor's blocks adding memory/GC pressure."""
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
+    from sports_data_integration_and_forecasting_pipeline_spark.operators.scoped import (
         release_caches,
     )
 

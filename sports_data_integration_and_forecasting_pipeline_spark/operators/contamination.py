@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .scoped import persist_scoped
+
 
 def kmv_registers(
     df: DataFrame,
@@ -113,7 +115,6 @@ def kmv_pairwise_overlap(
     rather than silently overestimating. Sketches from external sources
     lacking the column skip the guard (documented caveat: the caller
     then owns the k discipline)."""
-    from .dedup import persist_scoped
 
     if "build_k" in registers.columns:
         k_build = registers.agg(

@@ -37,9 +37,14 @@ from __future__ import annotations
 from functools import reduce
 from operator import add
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .parallelism import ensure_parallelism, exclusive_prefix_offsets
+
+# release_caches is re-exported for callers that drain dedup queries
+from .scoped import call_tag, checkpoint_scoped, persist_scoped, release_caches  # noqa: F401
 
 NUM_MINHASH = 128  # production-grade signature: est_jaccard granularity 1/128
 MINHASH_BANDS = 16  # 16 bands x 8 rows -> collision prob (j^8 per band)
@@ -47,48 +52,6 @@ MINHASH_PRIME = 4_294_967_311  # smallest prime > 2^32
 SIMHASH_BITS = 16
 SIMHASH_PAIR_BITS = 60  # wide fingerprint for pair joins (see simhash60)
 SIMHASH_BAND_BITS = 15  # 4 bands x 15 bits -> 32768 bucket values/band
-
-
-# Bounded persist registry: pair operators cache their signature/index df
-# (it feeds both join sides). Each new invocation releases the previous
-# cache for the same (session, role), so repeated calls in one session hold
-# at most one cached copy per role instead of accumulating blocks — while a
-# second concurrent SparkSession (or thread) never unpersists a DataFrame
-# still backing another session's unevaluated result. Mutation is
-# lock-guarded; the registry is keyed by the owning SparkSession's id so
-# stopped sessions' entries can't collide with a successor's. Battery plans
-# and other operator modules share this registry (the house persist
-# pattern).
-import threading
-
-_ACTIVE_CACHE: dict[tuple[int, str], DataFrame] = {}
-_CACHE_LOCK = threading.Lock()
-
-
-def persist_scoped(role: str, df: DataFrame) -> DataFrame:
-    key = (id(df.sparkSession), role)
-    with _CACHE_LOCK:
-        prev = _ACTIVE_CACHE.get(key)
-        if prev is df:
-            # Re-registering the SAME DataFrame (e.g. a caller eagerly
-            # materialized it under this role before passing it down) is a
-            # no-op — unpersist+repersist here would silently drop the
-            # already-computed blocks and force a recompute.
-            return df
-        if prev is not None:
-            prev.unpersist()
-        out = df.persist()
-        _ACTIVE_CACHE[key] = out
-    return out
-
-
-def release_caches() -> None:
-    """Unpersist every cache this module is holding (call after draining a
-    batch of dedup queries; tests assert this leaves zero cached RDDs)."""
-    with _CACHE_LOCK:
-        for df in _ACTIVE_CACHE.values():
-            df.unpersist()
-        _ACTIVE_CACHE.clear()
 
 
 def _mh_params(i: int) -> tuple[int, int]:
@@ -183,8 +146,6 @@ def shingle_jaccard_pairs(
     Shingle identity is the 60-bit md5 hash (see :func:`h60`): the
     inverted index shuffles and compares 8-byte longs, never strings.
     """
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import ensure_parallelism
-
     # r8: shingles come from the codegen lead-window enumerator — the
     # transform/array_distinct lambda form is interpreted per element
     # (SCALING.md round-8 finding; measured 6× on the corpus pass at
@@ -286,8 +247,6 @@ def shingle_jaccard_prefix_pairs(
     :func:`shingle_jaccard_pairs` output filtered to the threshold
     (property-tested in tests/test_dedup.py).
     """
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import ensure_parallelism
-
     t = threshold_pct
     # r8: codegen lead-window shingles (see shingle_jaccard_pairs note —
     # including the unique_id contract: non-PK ids need unique_id=False)
@@ -410,8 +369,6 @@ def minhash_signatures(
     n-grams across rows sharing an id); pass ``unique_id=False`` for
     non-PK ids — rows sharing an id then get ONE signature over the
     union of their shingle sets."""
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import ensure_parallelism
-
     # r8: codegen lead-window shingles (min over duplicates == min over
     # distinct, so no dedup needed); the groupBy(id) below reuses the
     # doc-granular exchange ensure_parallelism planted
@@ -663,8 +620,8 @@ def connected_components(
     labelling. Every round is one distributed join +
     aggregate; ``localCheckpoint`` truncates the growing lineage so
     round N doesn't replay rounds 1..N-1, and convergence is detected
-    by the monotone label-sum invariant (one flat aggregate), never an
-    old-vs-new join.
+    by the monotone label-sum invariant, observed on the checkpoint job
+    itself (one job per round), never an old-vs-new join.
     """
     # Materialize the edge list ONCE before the loop (r15, found by the
     # full-battery sf1 sweep): `sym` feeds the neighbor join on EVERY
@@ -685,22 +642,32 @@ def connected_components(
         )
         .repartition("m"),
     )
-    labels = nodes.select(
-        F.col(node_col).alias("n"), F.col(node_col).cast("long").alias("label")
-    ).localCheckpoint()
+    # Convergence check without a join or an extra job: min-label
+    # propagation only ever DECREASES a node's label, so Σlabel is
+    # strictly monotone and Σ unchanged ⟺ no label changed. The sum is an
+    # observed metric of each round's checkpoint job (decimal
+    # accumulator: Σ over corpus-scale long ids must not wrap). Each
+    # round's checkpoint replaces its predecessor's under one per-call
+    # role: the new round is materialized, lineage cut, before the old
+    # one is freed.
+    role = f"cc_labels_{call_tag()}"
 
-    # Convergence check without a join: min-label propagation only ever
-    # DECREASES a node's label, so Σlabel is strictly monotone and
-    # Σ unchanged ⟺ no label changed. The per-round old-vs-new
-    # equi-join + filter + count is replaced by one tiny aggregate over
-    # the flat checkpointed table (decimal accumulator: Σ over corpus-
-    # scale long ids must not wrap).
-    def _label_sum(lb: DataFrame):
-        return lb.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
+    def _checkpoint_with_sum(lb: DataFrame):
+        obs = Observation()
+        lb = checkpoint_scoped(
+            role,
+            lb.observe(
+                obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+            ),
+        )
+        return lb, obs.get["s"]
 
-    prev_sum = _label_sum(labels)
+    labels, prev_sum = _checkpoint_with_sum(
+        nodes.select(
+            F.col(node_col).alias("n"),
+            F.col(node_col).cast("long").alias("label"),
+        )
+    )
     for r in range(max_iter):
         # Path compression before each propagation (r16): label values
         # are node ids of the same component, so label(label(n)) is a
@@ -729,13 +696,11 @@ def connected_components(
             sym.join(labels.withColumnRenamed("n", "m"), "m")
             .select("n", "label")
         )
-        new_labels = (
+        labels, new_sum = _checkpoint_with_sum(
             labels.unionByName(neighbor)
             .groupBy("n")
             .agg(F.min("label").alias("label"))
-        ).localCheckpoint()
-        new_sum = _label_sum(new_labels)
-        labels = new_labels
+        )
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
@@ -822,8 +787,6 @@ def simhash_pairs(
     The signature df is persisted: it feeds both join sides. The input is
     spread first — the 60 md5-bit-votes per doc are the CPU cost, and a
     single-split scan would compute them all on one core."""
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import ensure_parallelism
-
     sim = persist_scoped(
         "simhash_signatures",
         simhash60(ensure_parallelism(df, id_col), text_col, id_col),
@@ -1007,8 +970,6 @@ def sorted_neighborhood_candidates(
     # to AQE: broadcasts at test SF, a small shuffle at scale). Global
     # rank = broadcast per-partition count offsets + local rank — the
     # global_row_number arithmetic via the shared prefix helper.
-    from .parallelism import exclusive_prefix_offsets
-
     offsets = exclusive_prefix_offsets(
         base, F.count("*"), F.sum, zero=0, cast="long"
     )
@@ -1541,10 +1502,6 @@ def winnow_match_pairs(
     quadratically blow the pair join) → fingerprint equi-join →
     pair groupBy. Identical shape to :func:`shingle_jaccard_pairs`,
     one winnow cheaper."""
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import (
-        ensure_parallelism,
-    )
-
     fps = (
         winnow_fingerprints(
             ensure_parallelism(df, id_col),
@@ -1698,10 +1655,6 @@ def incremental_winnow_matches(
     state inverted index; the hot-fp list is a broadcast anti-join as
     in the one-shot path. ``(id_a, id_b, n_shared)`` with
     ``id_a < id_b``."""
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import (
-        ensure_parallelism,
-    )
-
     new_fps = persist_scoped(
         "winnow_inc_new_fps",
         winnow_state(

@@ -12,6 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from .scoped import persist_scoped
 
 STARTING_BANKROLL = 1000.0  # reference src/evaluation.py:16
 STAKE = 10.0  # reference src/evaluation.py:17
@@ -107,8 +110,6 @@ def rank_sum_auc(
     universe| rows.
 
     Returns ONE row: ``(n_pos, n_neg, auc_e6)``."""
-    from pyspark.sql.window import Window
-
     per_score = df.groupBy(F.col(score_col).alias("__s")).agg(
         F.count("*").cast("bigint").alias("__n"),
         F.sum(F.col(label_col).cast("int")).cast("bigint").alias("__np"),
@@ -199,7 +200,6 @@ def psi_segment_drift(
         raise ValueError(
             f"psi_segment_drift: bucket_width must be >= 1 (got {bucket_width})"
         )
-    from .dedup import persist_scoped
 
     cnt = persist_scoped(
         "psi_segment_bucket_counts",

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import h32
+from .dedup import h32, h60
 
 
 def heavy_hitters(
@@ -224,8 +224,6 @@ def hll_per_group(
     Returns ``(group_col, n_regs, rho_sum, est_e4)`` — register count,
     register checksum, and the estimate in 1e-4 units.
     """
-    from .dedup import h60
-
     d = (
         df.select(
             F.col(group_col),

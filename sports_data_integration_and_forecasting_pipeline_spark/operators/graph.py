@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .scoped import call_tag, checkpoint_scoped, persist_scoped
+
 
 def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Undirected view of a directed edge list: both orientations of every
@@ -65,20 +67,6 @@ def pagerank_integer(
     edges via :func:`symmetrize` in the same plan and wants the check's
     job back.
     """
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        persist_scoped,
-    )
-
-    # r16: the per-iteration localCheckpoint (an EAGER job per round,
-    # plus UnknownPartitioning scans that re-exchanged the rank table
-    # every round) is gone. Ranks reference their predecessor exactly
-    # once per round, so the lineage is LINEAR in iterations — the whole
-    # power iteration composes lazily into the consumer's single action,
-    # with e/deg scope-persisted (materialized once inside that action,
-    # released by dedup.release_caches — the registry also outlives this
-    # function, which the old eager form's function-exit unpersist
-    # required). A checkpoint valve every 8 rounds bounds plan depth for
-    # long runs.
     e = persist_scoped("pagerank_edges", edges.select(src, dst))
     deg = persist_scoped(
         "pagerank_deg", e.groupBy(src).agg(F.count("*").alias("__deg"))
@@ -100,6 +88,8 @@ def pagerank_integer(
                 "by construction)."
             )
     base = (100 - damping_pct) * scale // 100
+    # each valve is materialized from its predecessor, which is then dead
+    valve = f"pagerank_valve_{call_tag()}"
     ranks = deg.select(
         F.col(src).alias("node"), F.lit(scale).cast("long").alias("pr")
     )
@@ -124,7 +114,7 @@ def pagerank_integer(
             )
         )
         if (i + 1) % 8 == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint()
+            ranks = checkpoint_scoped(valve, ranks)
     return ranks
 
 
@@ -177,7 +167,7 @@ def triangle_counts(edges_ab: DataFrame) -> DataFrame:
     reference. Per-node counts explode the triangle rows instead of a
     3-way union, which would replay the wedge join three times.
     """
-    edges = edges_ab.localCheckpoint()
+    edges = checkpoint_scoped(f"triangle_edges_{call_tag()}", edges_ab)
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = edges.select(F.col("a").alias("x"), F.col("b").alias("z"))
@@ -224,27 +214,30 @@ def tree_roots(
 
     Returns ``(node, root, depth)``.
     """
-    state = parents.select(
-        F.col(child).alias("node"),
-        F.coalesce(F.col(parent), F.col(child)).alias("anc"),
-        F.when(F.col(parent).isNull(), 0).otherwise(1).alias("depth"),
-    ).localCheckpoint()
+    role = f"tree_roots_{call_tag()}"
+    state = checkpoint_scoped(
+        role,
+        parents.select(
+            F.col(child).alias("node"),
+            F.coalesce(F.col(parent), F.col(child)).alias("anc"),
+            F.when(F.col(parent).isNull(), 0).otherwise(1).alias("depth"),
+        ),
+    )
     for _ in range(max_doublings):
         jump = state.select(
             F.col("node").alias("j_node"),
             F.col("anc").alias("j_anc"),
             F.col("depth").alias("j_depth"),
         )
-        state = (
-            state.join(jump, F.col("anc") == F.col("j_node"), "left")
-            .select(
+        state = checkpoint_scoped(
+            role,
+            state.join(jump, F.col("anc") == F.col("j_node"), "left").select(
                 "node",
                 F.coalesce(F.col("j_anc"), F.col("anc")).alias("anc"),
                 (
                     F.col("depth") + F.coalesce(F.col("j_depth"), F.lit(0))
                 ).alias("depth"),
-            )
-            .localCheckpoint()
+            ),
         )
     return state.select(
         "node",

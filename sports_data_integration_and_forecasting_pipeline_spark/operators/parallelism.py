@@ -14,6 +14,10 @@ so the guard below only ever *widens*, never coalesces.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from .scoped import persist_scoped
 
 
 def ensure_parallelism(
@@ -60,9 +64,6 @@ def exclusive_prefix_offsets(
     (``F.sum`` for counts/sums, ``F.min`` for minima); ``zero`` fills
     the empty prefix of the first partition (``None`` keeps NULL —
     right for min, where callers' ``F.least`` skips it)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     prefix = combine("__part").over(
         Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -113,11 +114,6 @@ def global_row_number(
     ``F.col("c").desc()``) — the same list drives both the range
     partitioner and the per-partition sort.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from .dedup import persist_scoped
-
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     stamped = persist_scoped(
@@ -168,8 +164,6 @@ def global_ntile(
     carries one count subtree that exchange-reuse executes once,
     instead of re-counting the source per rank. Default: counted from
     the ranked frame (reads the scoped cache)."""
-    from pyspark.sql import functions as F
-
     ranked = global_row_number(
         df,
         order_cols,
@@ -217,11 +211,6 @@ def global_running_sum(
     offset per range partition is the exclusive prefix of per-partition
     SUMS rather than counts. Order must be unique per row (pass
     tiebreaks) so the running sum is well-defined on both engines."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from .dedup import persist_scoped
-
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     stamped = persist_scoped(
@@ -282,11 +271,6 @@ def pareto_frontier_2d(
     annotation never matches NULL keys) and a NULL y has no dominance
     order; the guard is one map-side two-column aggregate, eager at
     construction time in the `_assert_bounded_group` house style."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from .dedup import persist_scoped
-
     # The NULL guard RIDES the per-x aggregate the algorithm needs
     # anyway (a null-y counter per group; null x forms its own group),
     # and the aggregate is persisted BEFORE the eager check — so the
@@ -373,8 +357,6 @@ def pareto_frontier_kd(
     exactness discipline; dominance then compares identically on every
     engine. Payload columns ride along untouched. Exact-duplicate
     points dominate nothing and all survive together."""
-    from pyspark.sql import functions as F
-
     if len(cols) < 2:
         raise ValueError("pareto_frontier_kd: need >= 2 metric columns")
 

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .scoped import persist_scoped
+
 RRF_K = 60  # the paper's constant; pinned
 
 
@@ -93,7 +95,6 @@ def bm25_by_example(
     score with a cand-id tiebreak (engine-identical total order).
 
     Returns ``(q_id, rank, cand_id, score)`` top ``n_cand`` per query."""
-    from .dedup import persist_scoped
 
     toks = docs.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("term")
@@ -255,7 +256,6 @@ def mmr_rerank_topk(
         .filter(F.col("__rn") <= n_cand)
         .drop("__rn")
     )
-    from .dedup import persist_scoped
 
     cand = persist_scoped("mmr_cand", cand)
     cvec = cand.join(

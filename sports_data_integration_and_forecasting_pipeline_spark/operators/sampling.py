@@ -18,8 +18,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from .dedup import h60
+from .scoped import persist_scoped
 
 _H60_SPACE = float(1 << 60)
 
@@ -430,17 +432,12 @@ def waterfill_token_caps(
     and two 1-row broadcast joins, all bounded by the domain count, not
     the corpus. The m-row count table feeds three consumers (the total,
     the fill aggregate, the output) — it is scope-persisted so the
-    corpus aggregate runs ONCE (released by ``dedup.release_caches``,
-    the house cache registry)."""
+    corpus aggregate runs ONCE."""
     if budget_num < 0 or budget_den <= 0:
         raise ValueError(
             "waterfill_token_caps: budget fraction must be "
             f">= 0 with positive denominator (got {budget_num}/{budget_den})"
         )
-    from pyspark.sql.window import Window
-
-    from .dedup import persist_scoped
-
     # ntok_col: a pre-counted per-row token column (composed pipelines
     # that already carry n_tok skip the re-split — same result, one
     # string pass fewer)
@@ -548,8 +545,6 @@ def budget_cap_prefix_select(
     THAT is a one-task window over KBs, and the offsets broadcast back.
     One broadcast cap join, one hash shuffle on (domain, bucket), one
     m-granular rollup, map-side combined."""
-    from pyspark.sql.window import Window
-
     # top 12 bits of the uniform 60-bit hash: 4096 order-preserving
     # hash-range buckets per domain
     hk = h60(F.concat(F.lit(salt), F.col(id_col).cast("string")))

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .scoped import persist_scoped
+
 DEFAULT_PLANES = 8
 
 
@@ -605,7 +607,6 @@ def semantic_dedup_keep(
 
     Returns ``(id_col, cell, canonical_id, is_kept)`` for EVERY input
     vector (vectors with no near-dup keep themselves)."""
-    from .dedup import persist_scoped
 
     e = _prepared(emb_df, id_col, vec_col).withColumn(
         "cell", ivf_assign(F.col("v"), centers)
@@ -680,8 +681,6 @@ def label_centroid_separation(
     map-side-combined (id, clabel) aggregate — per member, exactly
     k·d multiply-adds, linear in the corpus with a k·d constant;
     everything after is label-granular."""
-    from pyspark.sql.window import Window
-
     comp = df.select(
         F.col(label_col).alias("lbl"),
         F.col(id_col).alias("vid"),

@@ -8,16 +8,13 @@ scan 100 TB of documents at parquet-read speed.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# One fresh persist-role namespace per BPE induction call (see
-# _bpe_rounds) — never reused, so two inductions alive in one session
-# cannot unpersist each other's blocks.
-_BPE_INVOCATION_SEQ = itertools.count()
+from .dedup import h60
+from .parallelism import ensure_parallelism
+from .scoped import call_tag, persist_scoped
 
 # Marker stopwords per language for the n-gram/marker-word language-ID
 # heuristic. Deliberately tiny: language ID at corpus scale is a cheap
@@ -151,8 +148,6 @@ def unigram_perplexity(
     broadcastable at 100 TB) → per-doc agg (one shuffle on doc). All
     JVM-side Column arithmetic.
     """
-    from .dedup import persist_scoped
-    from .parallelism import ensure_parallelism
 
     toks = ensure_parallelism(df, id_col).select(
         F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("term")
@@ -219,9 +214,6 @@ def repetition_stats(
     swap is semantics-free). Fractions are exact int/int double
     divisions — engine-portable without rounding.
     """
-    from pyspark.sql.window import Window as _W
-
-    from .parallelism import ensure_parallelism
 
     # spread keyed by doc id: HashPartitioning(id) satisfies BOTH downstream
     # groupings ((id, sz, g) and (id)), so the whole pipeline still shuffles
@@ -235,7 +227,7 @@ def repetition_stats(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), " ")).alias("__p0", "__tok"),
     )
-    w_tok = _W.partitionBy(id_col).orderBy("__p0")
+    w_tok = Window.partitionBy(id_col).orderBy("__p0")
     l1 = F.lead("__tok", 1).over(w_tok)
     l2 = F.lead("__tok", 2).over(w_tok)
     first = F.col("__p0") == 0
@@ -297,7 +289,6 @@ def inverted_index(
     dedup hot-shingle cap); ``df`` still counts every document. Postings
     serialize to a CSV string so results compare exactly across engines.
     """
-    from .parallelism import ensure_parallelism
 
     toks = ensure_parallelism(df, id_col).select(
         F.col(id_col),
@@ -440,18 +431,11 @@ def _bpe_rounds(
     corpus."""
     if rounds < 1:
         raise ValueError(f"_bpe_rounds: rounds must be >= 1 (got {rounds})")
-    from .dedup import persist_scoped
 
-    # Persist roles are keyed PER INVOCATION (r16, ADVICE r15): with
-    # fixed roles a second BPE induction built in the same session
-    # would unpersist the first call's blocks while its lazy
-    # segmentation was still pending — correctness unaffected (pure
-    # recompute) but the cached-induction claim silently hollow. The
-    # bounded-registry discipline still holds: callers release via
-    # dedup.release_caches() after draining each query (the bench/probe
-    # loop convention), so at most one induction's blocks per in-flight
-    # consumer are ever held.
-    tag = next(_BPE_INVOCATION_SEQ)
+    # Persist roles are keyed PER INVOCATION: with fixed roles a second
+    # BPE induction built in the same session would unpersist the first
+    # call's blocks while its lazy segmentation was still pending.
+    tag = call_tag()
 
     wdf = (
         df.select(F.explode(_tokens(F.col(text_col))).alias("word"))
@@ -941,8 +925,6 @@ def ngram_novelty_stats(
     map-side combined. The split is the :mod:`.sampling` key-hash
     discipline — re-running the audit on 100 TB picks the identical
     split."""
-    from .dedup import h60
-
     if not (0.0 < holdout_fraction < 1.0):
         raise ValueError(
             "ngram_novelty_stats: holdout_fraction must be in (0, 1) "
@@ -1072,10 +1054,6 @@ def zipf_fit_stats(
     fit aggregate touches ≤ top_k rows per group."""
     if top_k < 2:
         raise ValueError(f"zipf_fit_stats: top_k must be >= 2 (got {top_k})")
-    from pyspark.sql.window import Window
-
-    from .dedup import persist_scoped
-
     toks = df.select(
         F.col(group_col),
         F.explode(_tokens(F.col(text_col))).alias("term"),

@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.scoped import persist_scoped
+
 from .battery_core import (
     QUERIES,
     _cents,
@@ -223,7 +225,6 @@ _QUALITY_KEPT_CTES = f"""
     "tokenizer fertility on the survivors' learned segmentation",
 )
 def curation_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import persist_scoped
     from sports_data_integration_and_forecasting_pipeline_spark.operators.sampling import (
         temperature_mixture_weights,
     )
@@ -808,11 +809,8 @@ def markov_steady_state_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sink self-loops, v0, and all THREE unrolled multiplies re-read the
     # cached ~25-row relation instead of re-running the events scan +
     # lead-window + counting aggregates per reference (the scoped-cache
-    # house pattern; released by release_caches between bench entries).
-    # At 100 TB you would materialize the transition counts exactly once
-    # the same way.
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import persist_scoped
-
+    # house pattern). At 100 TB you would materialize the transition
+    # counts exactly once the same way.
     tm = persist_scoped("markov_tm", tm)
     # state universe = sources ∪ targets; target-only states are sinks
     # and get an e9 self-loop so routed-in mass is retained, not dropped

@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.scoped import call_tag, checkpoint_scoped, persist_scoped
+
 from .battery_bpe_packing import _BPE_CTES, _BPE_ROUNDS, _QUALITY_KEPT_CTES
 from .battery_core import QUERIES, _r, _register, _sql_r, _t
 from .battery_embeddings import (
@@ -774,7 +776,6 @@ def _register_curation_v6() -> None:
     )
     def curation_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-            persist_scoped,
             shingle_jaccard_prefix_pairs,
         )
         from sports_data_integration_and_forecasting_pipeline_spark.operators.sampling import (
@@ -802,13 +803,16 @@ def _register_curation_v6() -> None:
         # gate+pair-join lineage under every reference (261 textual
         # exchanges without it, ~30 with). Eager — it runs inside fn(),
         # which bench.py times with the action for every entry.
-        surv = g.join(dropped, "doc_id", "left_anti").select(
-            "doc_id",
-            "lang",
-            F.size(F.split(F.col("text"), " "))
-            .cast("bigint")
-            .alias("n_tok"),
-        ).localCheckpoint()
+        surv = checkpoint_scoped(
+            f"v6_surv_{call_tag()}",
+            g.join(dropped, "doc_id", "left_anti").select(
+                "doc_id",
+                "lang",
+                F.size(F.split(F.col("text"), " "))
+                .cast("bigint")
+                .alias("n_tok"),
+            ),
+        )
         caps = waterfill_token_caps(
             surv, domain_col="lang", budget_num=3, budget_den=4,
             ntok_col="n_tok",

@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.scoped import call_tag, checkpoint_scoped
+
 from .battery_core import (
     QUERIES,
     _assert_bounded_group,
@@ -602,7 +604,8 @@ def embed_ivfpq_precoded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # index (lineage truncated: the query plan scans codes, never
     # floats). A committed per-SF index file would silently rot when
     # the driver regenerates testdata, so the entry builds it fresh.
-    enc = ivfpq_index_codes(emb, IVF_CENTROIDS, PQ_CODEBOOKS).localCheckpoint()
+    codes = ivfpq_index_codes(emb, IVF_CENTROIDS, PQ_CODEBOOKS)
+    enc = checkpoint_scoped(f"ivfpq_enc_{call_tag()}", codes)
     return ivfpq_topk_precoded(
         enc,
         emb.filter(F.col("vec_id") < 10),

@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.scoped import persist_scoped
+
 from .battery_core import (
     QUERIES,
     _cents,
@@ -765,9 +767,6 @@ def rfm_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joined back by user_id (chaining the ntile calls instead would
     # nest the scoped caches and blow the plan TEXT up combinatorially
     # — same executed work, unreadable snapshots).
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        persist_scoped,
-    )
     from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import (
         global_ntile,
     )

@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.scoped import persist_scoped
+
 from .battery_core import _cents, _epoch_s, _fdiv, _r, _register, _sql_r, _t
 from .battery_events_warehouse import _SESSIONS_SQL, _user_sessions_spark
 from .battery_text_dedup import _shingle_raw_sql
@@ -1379,10 +1381,6 @@ _BM25_TERMS = ("dup", "join", "query", "sort")
     f"{_BM25_TERMS}, matched-term count, pinned doc_id tiebreak",
 )
 def bm25_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        persist_scoped,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")

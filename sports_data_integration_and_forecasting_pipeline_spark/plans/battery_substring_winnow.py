@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.scoped import persist_scoped
+
 from .battery_core import _r, _register, _sql_r, _t
 from .battery_embeddings import _COS_SQL, _emb_norm_cte
 from .battery_mixture_storage import _PPL_CTES, _PPL_CUT_E4
@@ -466,9 +468,6 @@ def curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         soft_dedup_weights,
         winnow_match_pairs,
     )
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        persist_scoped as _ps,
-    )
     from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import (
         ensure_parallelism,
     )
@@ -481,7 +480,7 @@ def curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # quality gate; survivors feed THREE consumers (weights, winnow,
     # final rollup) — scope-persist the filtered set
-    kept = _ps(
+    kept = persist_scoped(
         "curation_v3_kept",
         ensure_parallelism(
             quality_linear_filter(docs)
@@ -1026,9 +1025,6 @@ _DSIR_FLOOR_E6 = -1_200_000
     "deterministic floor analogue of DSIR resampling)",
 )
 def curation_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        persist_scoped,
-    )
     from sports_data_integration_and_forecasting_pipeline_spark.operators.sampling import (
         dsir_logratio_weights,
     )

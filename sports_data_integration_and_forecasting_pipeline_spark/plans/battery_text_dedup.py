@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.scoped import persist_scoped
+
 from .battery_core import _r, _register, _sql_r, _t
 
 
@@ -1052,7 +1054,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
         incremental_minhash_pairs,
         minhash_signatures,
-        persist_scoped,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -1107,7 +1108,6 @@ def dedup_incremental_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_signatures,
         incremental_minhash_pairs,
         minhash_signatures,
-        persist_scoped,
     )
 
     docs = _t(spark, sf_dir, "documents")

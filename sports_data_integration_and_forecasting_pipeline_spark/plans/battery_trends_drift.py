@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.scoped import call_tag, checkpoint_scoped, persist_scoped
+
 from .battery_core import (
     _PAIR_JOIN_MAX_PAIRS,
     _assert_bounded_group,
@@ -938,10 +940,6 @@ def hll_rolling_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     "smoothed term distributions; KL(en||en) = 0 by construction",
 )
 def kl_term_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        persist_scoped,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "lang", F.explode(F.split(F.col("text"), " ")).alias("term")
@@ -1114,15 +1112,17 @@ def kcore_cosupply_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # knn_sparsify already folds to distinct undirected (a, b) with a < b
     und = knn_sparsify(weighted, k=5)
-    sym = (
-        und.select(F.col("a").alias("s"), F.col("b").alias("t"))
-        .unionByName(und.select(F.col("b").alias("s"), F.col("a").alias("t")))
-        # Each peel references sym TWICE (degree agg + the semi-joins),
-        # so without truncation round r's lineage holds 2^r copies of
-        # the co-supply pair join; a localCheckpoint per round (as in
-        # dedup.connected_components) keeps every round's input a flat
-        # ≤|kept-edges| table instead.
-        .localCheckpoint()
+    # Each peel references sym TWICE (degree agg + the semi-joins), so
+    # without truncation round r's lineage holds 2^r copies of the
+    # co-supply pair join; a checkpoint per round (as in
+    # dedup.connected_components) keeps every round's input a flat
+    # ≤|kept-edges| table instead, each replacing its predecessor.
+    role = f"kcore_sym_{call_tag()}"
+    sym = checkpoint_scoped(
+        role,
+        und.select(F.col("a").alias("s"), F.col("b").alias("t")).unionByName(
+            und.select(F.col("b").alias("s"), F.col("a").alias("t"))
+        ),
     )
     for _ in range(4):
         keep = (
@@ -1131,10 +1131,11 @@ def kcore_cosupply_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("d") >= 3)
             .select("s")
         )
-        sym = (
-            sym.join(keep, "s", "left_semi")
-            .join(keep.withColumnRenamed("s", "t"), "t", "left_semi")
-            .localCheckpoint()
+        sym = checkpoint_scoped(
+            role,
+            sym.join(keep, "s", "left_semi").join(
+                keep.withColumnRenamed("s", "t"), "t", "left_semi"
+            ),
         )
     return sym.groupBy("s").agg(
         F.count("*").cast("bigint").alias("core_degree")
@@ -1200,7 +1201,6 @@ def kcore_cosupply_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
-        persist_scoped,
         shingle_rows,
     )
     from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import (

@@ -65,10 +65,10 @@ def with_event_time(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
 def _event_time_watermarked(df: DataFrame, delay: str) -> DataFrame:
     """``df`` with a watermark on ``event_ts``. One already there is kept
     (``delay`` is then unused): Spark refuses to redefine a watermark,
-    and keeping it lets ``detect_line_moves(dedup_line_changes(s))`` run
-    as one query. The column's watermark metadata alone can be stale (a
-    schema copied from a watermarked stream carries it), so the plan
-    must hold a watermark node too."""
+    and keeping it lets every operator here chain after
+    ``dedup_line_changes`` as one query. The column's watermark metadata
+    alone can be stale (a schema copied from a watermarked stream
+    carries it), so the plan must hold a watermark node too."""
     if (
         "spark.watermarkDelayMs" in df.schema["event_ts"].metadata
         and "EventTimeWatermark" in df._jdf.queryExecution().logical().toString()
@@ -96,7 +96,7 @@ def market_rollup_stream(
     """Tumbling-window market rollup: per (window, market) the line-change
     count and price stats. Late rows merge until the watermark passes."""
     return (
-        df.withWatermark("event_ts", watermark)
+        _event_time_watermarked(df, watermark)
         .groupBy(F.window("event_ts", window).alias("w"), "market")
         .agg(
             F.count("*").alias("n_changes"),
@@ -132,7 +132,7 @@ def join_with_game_meta(
     ``meta_game_id`` and ``meta_ts`` (+ payload columns); the odds side
     ``game_id`` and ``event_ts``.
     """
-    odds = odds_stream.withWatermark("event_ts", watermark)
+    odds = _event_time_watermarked(odds_stream, watermark)
     meta = meta_stream.withWatermark("meta_ts", watermark)
     return odds.join(
         meta,
@@ -156,7 +156,7 @@ def game_session_stream(
     are the one event-time shape tumbling windows can't express; state is
     per active session and merges/evicts under the watermark."""
     return (
-        df.withWatermark("event_ts", watermark)
+        _event_time_watermarked(df, watermark)
         .groupBy(F.session_window("event_ts", gap).alias("w"), "game_id")
         .agg(
             F.count("*").alias("n_changes"),

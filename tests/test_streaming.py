@@ -16,6 +16,7 @@ import pytest
 from sports_data_integration_and_forecasting_pipeline_spark.streaming import (
     dedup_line_changes,
     detect_line_moves,
+    game_session_stream,
     market_rollup_stream,
     read_snapshot_stream,
     run_available_now,
@@ -118,36 +119,99 @@ def test_detect_line_moves_stateful(spark, snapshot_dir):
     assert abs(r["move_pct"] - 10.0) < 1e-9
 
 
-def test_line_moves_chained_after_dedup(spark, snapshot_dir, tmp_path):
-    # dedup_line_changes sets the event_ts watermark; detect_line_moves
-    # keeps it instead of redefining it, so the two chain in one query
-    def stream():
-        return with_event_time(
-            read_snapshot_stream(spark, snapshot_dir, max_files_per_trigger=1)
-        )
-
-    chained = _sink("chained")
-    run_available_now(detect_line_moves(dedup_line_changes(stream())), chained)
-
-    # two-step form: the deduped stream lands in parquet, then a second
-    # query detects moves over it
-    deduped = dedup_line_changes(stream())
+def _deduped_then_reread(spark, snapshot_dir, tmp_path):
+    """First query of the two-step form: the deduped stream lands in
+    parquet, then is read back as a new stream (copied schema, no
+    watermark node)."""
+    deduped = dedup_line_changes(
+        with_event_time(read_snapshot_stream(spark, snapshot_dir))
+    )
     out, ckpt = str(tmp_path / "deduped"), str(tmp_path / "ckpt")
     deduped.writeStream.format("parquet").option("path", out).option(
         "checkpointLocation", ckpt
     ).trigger(availableNow=True).start().awaitTermination()
+    return spark.readStream.schema(deduped.schema).parquet(out)
+
+
+def _rows(spark, name):
+    return sorted(tuple(r) for r in spark.table(name).collect())
+
+
+def test_line_moves_chained_after_dedup(spark, snapshot_dir, tmp_path):
+    # dedup_line_changes sets the event_ts watermark; detect_line_moves
+    # keeps it instead of redefining it, so the two chain in one query
+    stream = with_event_time(
+        read_snapshot_stream(spark, snapshot_dir, max_files_per_trigger=1)
+    )
+    chained = _sink("chained")
+    run_available_now(detect_line_moves(dedup_line_changes(stream)), chained)
+
     # the copied schema carries the watermark metadata but the re-read
     # stream has no watermark: detect_line_moves must set its own
-    moves_df = detect_line_moves(spark.readStream.schema(deduped.schema).parquet(out))
+    moves_df = detect_line_moves(_deduped_then_reread(spark, snapshot_dir, tmp_path))
     assert "EventTimeWatermark" in moves_df._jdf.queryExecution().logical().toString()
     two_step = _sink("two_step")
     run_available_now(moves_df, two_step)
 
-    def moves(name):
-        return sorted(tuple(r) for r in spark.table(name).collect())
+    assert _rows(spark, chained) == _rows(spark, two_step)
+    assert len(_rows(spark, chained)) == 1
 
-    assert moves(chained) == moves(two_step)
-    assert len(moves(chained)) == 1
+
+@pytest.mark.parametrize(
+    "op", [market_rollup_stream, game_session_stream], ids=lambda f: f.__name__
+)
+def test_aggregate_chained_after_dedup(spark, snapshot_dir, tmp_path, op):
+    # the rollup and the session window keep dedup's event_ts watermark,
+    # so each chains after it in one query
+    stream = with_event_time(read_snapshot_stream(spark, snapshot_dir))
+    chained = _sink("chained_agg")
+    run_available_now(op(dedup_line_changes(stream)), chained, output_mode="complete")
+    two_step = _sink("two_step_agg")
+    run_available_now(
+        op(_deduped_then_reread(spark, snapshot_dir, tmp_path)),
+        two_step,
+        output_mode="complete",
+    )
+    got = _rows(spark, chained)
+    assert got == _rows(spark, two_step)
+    # one window / session over the 4 distinct line changes
+    assert len(got) == 1 and spark.table(chained).first()["n_changes"] == 4
+
+
+def test_game_meta_join_chained_after_dedup(spark, snapshot_dir, tmp_path):
+    from sports_data_integration_and_forecasting_pipeline_spark.streaming import join_with_game_meta
+
+    d = tmp_path / "meta"
+    d.mkdir()
+    pq.write_table(
+        pa.Table.from_pandas(
+            pd.DataFrame(
+                [("2026-08-13T09:50:00", "g1", "scheduled")],
+                columns=["meta_time", "meta_game_id", "status"],
+            ),
+            preserve_index=False,
+        ),
+        str(d / "meta_0.parquet"),
+    )
+
+    def meta():
+        return (
+            spark.readStream.schema("meta_time string, meta_game_id string, status string")
+            .parquet(str(d))
+            .withColumn("meta_ts", F.to_timestamp(F.col("meta_time")))
+        )
+
+    odds = with_event_time(read_snapshot_stream(spark, snapshot_dir))
+    chained = _sink("chained_join")
+    run_available_now(join_with_game_meta(dedup_line_changes(odds), meta()), chained)
+    two_step = _sink("two_step_join")
+    run_available_now(
+        join_with_game_meta(_deduped_then_reread(spark, snapshot_dir, tmp_path), meta()),
+        two_step,
+    )
+    got = _rows(spark, chained)
+    assert got == _rows(spark, two_step)
+    assert len(got) == 4
 
 
 def test_canonical_stream_sink(spark, snapshot_dir, tmp_path):

@@ -8,6 +8,10 @@ Usage: python tools/sweep_oracle.py [sf_dir] name [name ...]
 Each line ends with the entry's wall seconds: total, and the
 oracle-side part for oracle-checked entries.
 
+After each entry the scoped registry is released (``release_caches``);
+an entry that still leaves more persistent RDDs than were held before it
+fails the sweep with a ``LEAK n`` line.
+
 Env knobs (for the above-gate-scale sf1 sweep): SWEEP_CPUS (local[N]
 threads, default 8), SWEEP_SHUFFLE (shuffle partitions, default 16).
 """
@@ -20,6 +24,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from sports_data_integration_and_forecasting_pipeline_spark.operators.scoped import release_caches  # noqa: E402
 from sports_data_integration_and_forecasting_pipeline_spark.plans import QUERIES  # noqa: E402
 from sports_data_integration_and_forecasting_pipeline_spark.session import get_spark  # noqa: E402
 from tests.oracle import compare, duckdb_con  # noqa: E402
@@ -33,9 +38,11 @@ def main() -> int:
     shuffle = int(os.environ.get("SWEEP_SHUFFLE", "16"))
     spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=shuffle)
     con = duckdb_con(sf)
+    persistent_rdds = spark.sparkContext._jsc.sc().getPersistentRDDs
     bad = 0
     for name in names:
         spec = QUERIES[name]
+        held_before = persistent_rdds().size()
         try:
             t0 = time.monotonic()
             got = spec.fn(spark, sf)
@@ -64,6 +71,12 @@ def main() -> int:
                 f"{name}: ERROR {type(e).__name__}: {str(e)[:200]}",
                 flush=True,
             )
+        finally:
+            release_caches()
+            leaked = persistent_rdds().size() - held_before
+            if leaked > 0:
+                bad += 1
+                print(f"{name}: LEAK {leaked}", flush=True)
     con.close()
     return 1 if bad else 0
 
