@@ -103,13 +103,6 @@ def devig_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: single window (shuffle+sort on l_orderkey); at 100 TB prefer
 # max_by for the no-sort variant — kept as window here because the oracle
 # needs the exact tiebreak.
-# PINNED (r8, r7-verdict task 2): the r7 bench line's 1.292 s (+57% vs
-# r6's 0.824) was HOST DRIFT, not a regression — both-orderings
-# back-to-back probe at sf0.1 (r7's unigram method) measured min-steady
-# 0.69 s in each ordering on untouched code. Same verdict for
-# best_odds_report_join below (bench 1.259 s → probed 0.40-0.50 s both
-# orderings). Cross-round per-query bench diffs are noise
-# (bench.py:_run_calibration note); calib_drift_flag now records it.
 # ---------------------------------------------------------------------------
 @_register(
     "best_price_per_order",
@@ -188,9 +181,6 @@ def arbitrage_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # summary (the notebook's join, cell 6).
 # Scale: window and groupBy share the l_orderkey prefix; the join-back is
 # on l_orderkey (AQE picks broadcast when the summary side is small).
-# PINNED (r8): the r7 bench 1.259 s (+139%) adjudicated as host drift —
-# see the probe record at best_price_per_order above (0.40-0.50 s
-# min-steady in both orderings, untouched plan).
 # ---------------------------------------------------------------------------
 @_register(
     "best_odds_report_join",

@@ -537,10 +537,6 @@ def profile_orders_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BEFORE the sum, so partition order can't move the total).
 # ===========================================================================
 
-# r11 bench adjudication (r10's 0.53 -> 0.79 s flag, run under
-# calib_drift_flag=true): re-measured min 0.650/0.594 s fwd/rev on a
-# calm session — recovered to the r9 band. Host drift, not a plan
-# change (diff clean since r6).
 @_register(
     "q5_local_supplier_revenue",
     """
@@ -892,24 +888,6 @@ def countmin_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-doc sum, so aggregation is exact integer arithmetic
 # (order-independent across partitions and engines); only the final exp
 # is floating, rounded at 4 dp.
-# r7 measurement note (VERDICT r6 task 4): the r6 bench's +41% on this
-# entry was HOST DRIFT, not a regression — re-measured back-to-back
-# with quality_perplexity_cut in both orderings on one calm session:
-# unigram 1.01 s vs cut 1.05 s, then (swapped) unigram 0.88 s vs cut
-# 1.40 s. Unigram sits at-or-below its family-mate, both share the one
-# persisted tokenize (asserted by test_perplexity_family_single_
-# tokenize), and the r6 round's calib_md5 already flagged that host
-# 2.3× slow. No plan change needed.
-# r9 adjudication (VERDICT r8 task 3): the r8 bench's 0.688 → 1.376 s
-# (+100%) was again mid-battery interference, not a plan change — no
-# r8 commit touched this plan (git -S verified by the judge), the
-# token path is plain split+explode (codegen; NOT the interpreted
-# transform-lambda the bigram sibling left behind — checked), and the
-# both-orderings re-measure on one calm session landed 0.685 s and
-# 0.768 s (exactly the r7 value) with its family-mates at their r8
-# numbers. Third drift swing for this entry; the bench's min-of-last-2
-# convention cannot fully shield a 0.7 s entry from a GC/cleaner spike
-# landing on both timed runs. No plan change needed.
 # ===========================================================================
 
 _PPL_CTES = """

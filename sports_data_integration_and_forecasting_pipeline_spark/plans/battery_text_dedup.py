@@ -385,25 +385,11 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return soft_dedup_weights(_t(spark, sf_dir, "documents"))
 
 
-# r11 bench adjudication (VERDICT r10 task 2, both-orderings on a calm
-# session): the r10 1.35 -> 2.10 s swing re-measured min 1.773/1.666 s
-# fwd/rev — midway between the two rounds, with ±3x WITHIN-session
-# spread on individual runs ([6.9, 6.3, 1.8] fwd) despite release_caches
-# between entries. The entry's plan is unchanged since r8 (diff clean);
-# its prefix-filter shuffle makes it the most scheduling-spike-sensitive
-# dedup entry. Host variance, not a plan defect — no action.
-# r13 (VERDICT r12 task 4 — the fourth consecutive adjudication round
-# for this entry): the suggested structural variance fix (posting-list
-# groupBy + JVM-side i<j enumeration replacing the prefix self-join)
-# was BUILT, verified output-identical at both sweep scales, and then
-# REJECTED on measurement: cold-run band 3.98x -> 1.35x as hoped, but
-# bench-style warm runs +0.6 s and the in-battery time TRIPLED
-# (1.38 -> 4.16 s; split_leakage_audit dragged 1.57 -> 4.17 s) — the
-# collect_list buffers are disproportionately sensitive to mid-battery
-# heap pressure. Full A/B tables in SCALING.md r13. The self-join
-# stays; the entry's calm corrected r13 row (1.381 s, <1.3x) already
-# met the verdict's first Done-option, and the +-3x single-run band is
-# adjudicated host/scheduling noise, not a plan defect.
+# Why the prefix self-join stays: a posting-list groupBy + JVM-side i<j
+# enumeration in its place was built, output-identical at both sweep
+# scales, and rejected on measurement (r13): warm runs +0.6 s and the
+# in-battery time tripled (1.38 -> 4.16 s), its collect_list buffers
+# being sensitive to mid-battery heap pressure. A/B tables in SCALING.md.
 @_register(
     "dedup_shingle_jaccard",
     f"""

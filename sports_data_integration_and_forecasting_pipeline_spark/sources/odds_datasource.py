@@ -45,7 +45,10 @@ from sports_data_integration_and_forecasting_pipeline_spark.schemas import GAME_
 def _to_row(value, dtype):
     """Recursively shape a parsed-JSON value into the tuple form Spark's
     Python DataSource expects for the declared schema (absent keys become
-    nulls — the reference's ``.get()`` tolerance, SURVEY §1.3)."""
+    nulls — the reference's ``.get()`` tolerance, SURVEY §1.3). A number
+    that does not parse becomes null, the ``try_cast`` semantics of
+    :func:`...functions.odds_math.coerce_numeric`, so one bad record
+    does not fail the read."""
     if value is None:
         return None
     if isinstance(dtype, T.StructType):
@@ -55,7 +58,10 @@ def _to_row(value, dtype):
     if isinstance(dtype, T.StringType):
         return str(value)
     if isinstance(dtype, T.DoubleType):
-        return float(value)
+        try:
+            return float(value)
+        except (TypeError, ValueError):
+            return None
     return value
 
 

@@ -3,11 +3,13 @@ mode, batch and streaming, piped into the engine's flatten/arb pipeline."""
 
 from __future__ import annotations
 
+import json
 import uuid
 
 import pytest
 
 import sports_data_integration_and_forecasting_pipeline_spark as eng
+from sports_data_integration_and_forecasting_pipeline_spark.sources import read_odds_json
 from sports_data_integration_and_forecasting_pipeline_spark.sources.odds_datasource import OddsApiDataSource
 
 FIXTURE = "tests/fixtures/sample_odds.json"
@@ -73,3 +75,23 @@ def test_stream_read_fixture(spark):
     )
     q.awaitTermination()
     assert spark.table(name).count() >= 2  # at least one poll of 2 games
+
+
+def test_batch_read_nulls_a_malformed_number(spark, tmp_path):
+    """An unparseable ``point`` becomes null instead of failing the read,
+    and the rows equal the JSON file reader's on the same file."""
+    games = json.loads(open(FIXTURE).read())
+    games[0]["bookmakers"][0]["markets"][0]["outcomes"][0]["point"] = "N/A"
+    corrupt = tmp_path / "corrupt_odds.json"
+    corrupt.write_text(json.dumps(games))
+
+    got = (
+        spark.read.format("odds_api").option("fixture_path", str(corrupt)).load()
+    )
+    want = read_odds_json(spark, str(corrupt))
+    def by_id(df):
+        return sorted(df.collect(), key=lambda r: r["id"])
+
+    assert by_id(got) == by_id(want)
+    first = got.where("id = 'game_001'").first()
+    assert first["bookmakers"][0]["markets"][0]["outcomes"][0]["point"] is None

@@ -1,6 +1,5 @@
 """Regenerate STREAMING_EVIDENCE.md: one captured StreamingQueryProgress
-per streaming battery entry (VERDICT r7 task 6) — the streaming
-counterpart of EXPLAINS.md's batch plan snapshots. Batch EXPLAIN doesn't
+per streaming battery entry (VERDICT r7 task 6). Batch EXPLAIN doesn't
 apply to a memory-sink availableNow drain, but the progress record
 carries the evidence that matters at 100×: rows ingested per
 micro-batch, state-store row counts (bounded state = the scale claim),
@@ -41,8 +40,8 @@ SF = "/root/testdata/sf0.01"
 
 class _Capture(StreamingQueryListener):
     """Collects every progress event AND the query's micro-batch
-    physical plan (r14 verdict task 4: EXPLAINS.md can't hold these —
-    batch df.explain doesn't apply to a memory-sink drain — so the plan
+    physical plan (r14 verdict task 4: batch df.explain doesn't apply
+    to a memory-sink drain, so the plan
     is captured here, from the live query, during the same drain the
     correctness check exercises). The lookup races query termination
     (availableNow drains stop themselves), so it is attempted on every
@@ -106,8 +105,8 @@ def main() -> None:
     out = ["""# STREAMING_EVIDENCE — captured StreamingQueryProgress per streaming entry
 
 Generated by `tools/gen_streaming_evidence.py` (VERDICT r7 task 6): the
-five memory-sink streaming entries can't appear in EXPLAINS.md (batch
-EXPLAIN doesn't apply), so each gets a progress capture from its real
+five memory-sink streaming entries have no batch EXPLAIN (it doesn't
+apply to a memory-sink drain), so each gets a progress capture from its real
 correctness drain at sf0.01 instead. What to read:
 
 - `micro_batches` / `total_input_rows` — the replay genuinely arrives in
@@ -120,8 +119,7 @@ correctness drain at sf0.01 instead. What to read:
 - `watermark` — advances past the staged history, so late-data semantics
   (the drop/accept boundary the oracle encodes) are exercised.
 - the micro-batch physical plan (r14 verdict task 4) — captured live
-  from the query during the drain (`explainInternal`), these are the
-  five plan sections EXPLAINS.md cannot hold; look for
+  from the query during the drain (`explainInternal`); look for
   StateStoreSave/SessionWindowStateStoreSave, the watermark filter, and
   FlatMapGroupsInPandasWithState as the stateful operators.
 """]
@@ -152,8 +150,7 @@ correctness drain at sf0.01 instead. What to read:
         if cap.plan:
             out.append(
                 "Micro-batch physical plan (last successful capture "
-                "during the drain — the streaming counterpart of this "
-                "entry's missing EXPLAINS.md section):\n"
+                "during the drain):\n"
             )
             out.append("```")
             out.append(cap.plan.strip())

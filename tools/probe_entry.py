@@ -7,17 +7,18 @@ Usage:
     python tools/probe_entry.py ENTRY [ENTRY ...] [--runs N] [--sf DIR]
 
 Protocol per entry, the bench's own code path (``bench.py``):
-  - ``calibrate`` FIRST and LAST, so the probe carries its own host-speed
-    yardstick and ``calib_drift`` flag;
   - ``--runs`` executions (default 5) through ``time_entry``: builder
     ``fn()`` then the noop-sink action, caches released after each run;
+    each run's measurement record is printed;
   - run 1 (codegen/plan warm-up) is reported but excluded from the
-    min/median/max band, which is taken over fn+action.
+    min/median/max bands, taken over fn+action (``seconds``) and over
+    ``cpu_s``.
 
 Prints one JSON line:
-  {"sf": ..., "calib_md5_sec": ..., "calib_drift": ...,
-   "entries": {name: {"runs": [...], "fn": [...], "action": [...],
-                      "warm": r1, "min": m, "median": md, "max": mx}}}
+  {"sf": ...,
+   "entries": {name: {"runs": [record, ...],
+                      "seconds": {"warm": r1, "min": m, "median": md, "max": mx},
+                      "cpu_s": {"warm": ..., "min": ..., "median": ..., "max": ...}}}}
 """
 
 from __future__ import annotations
@@ -56,43 +57,38 @@ def main() -> None:
         raise SystemExit("--runs must be >= 2: run 1 is the excluded "
                          "warm-up, so at least one steady run is needed")
 
-    from bench import calib_drift, calibrate, time_entry
+    from bench import seconds, time_entry
     from sports_data_integration_and_forecasting_pipeline_spark.plans.battery import QUERIES
     from sports_data_integration_and_forecasting_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="probe")
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
-    c0 = calibrate(spark)
+    def band(samples: list[float]) -> dict:
+        steady = samples[1:]
+        return {
+            "warm": samples[0],
+            "min": min(steady),
+            "median": round(statistics.median(steady), 3),
+            "max": max(steady),
+        }
+
     entries: dict[str, dict] = {}
     for name in names:
         spec = QUERIES.get(name)
         if spec is None:
             entries[name] = {"error": "unknown entry"}
             continue
-        split = [time_entry(spark, spec, sf_dir) for _ in range(runs_n)]
-        samples = [round(fn_s + action_s, 3) for fn_s, action_s in split]
-        steady = samples[1:]
+        runs = [time_entry(spark, spec, sf_dir) for _ in range(runs_n)]
         entries[name] = {
-            "runs": samples,
-            "fn": [fn_s for fn_s, _ in split],
-            "action": [action_s for _, action_s in split],
-            "warm": samples[0],
-            "min": min(steady),
-            "median": round(statistics.median(steady), 3),
-            "max": max(steady),
+            "runs": runs,
+            "seconds": band([seconds(r) for r in runs]),
+            "cpu_s": band([r["cpu_s"] for r in runs]),
         }
-    c1 = calibrate(spark)
-    drift = calib_drift(c0, c1)
     print(json.dumps({
         "sf": os.path.basename(sf_dir.rstrip("/")),
-        **c0,
-        **{k.replace("calib_", "calib_end_"): v for k, v in c1.items()},
-        "calib_drift": drift,
-        "calib_drift_flag": bool(drift is not None and drift > 0.20),
         "entries": entries,
     }))
-
 
 if __name__ == "__main__":
     main()
