@@ -12,8 +12,8 @@ sink (full computation, no driver collect, no disk write). An entry's
 seconds are builder + action; ``cpu_s`` is the battery's engine CPU
 seconds. The full line in ``BENCH.local.json`` also carries
 ``entries``, each entry's measurement record (``time_entry``): builder
-and action seconds, engine CPU, and the jobs, stages and shuffle MB of
-each.
+and action seconds, engine CPU, fixpoint rounds, and the jobs, stages
+and shuffle MB of each.
 
 Streaming entries are not timed: they stage their source files on each
 call.
@@ -40,11 +40,13 @@ def timed_names(queries: dict) -> list[str]:
 def time_entry(spark, spec, sf_dir: str) -> dict:
     """One execution of a battery entry as its measurement record:
 
-    ``{"fn_s", "action_s", "cpu_s", "fn": {...}, "action": {...}}``
+    ``{"fn_s", "action_s", "cpu_s", "rounds", "fn": {...}, "action": {...}}``
 
     ``fn_s`` times the builder ``spec.fn()``, ``action_s`` the noop-sink
     action; ``cpu_s`` is the engine's CPU seconds over both
-    (``perfbench.probe.EngineCpu``). ``fn`` and ``action`` hold the
+    (``perfbench.probe.EngineCpu``). ``rounds`` is the number of
+    fixpoint rounds the entry ran (``scoped.round_notes``), 0 for an
+    entry without a fixpoint loop. ``fn`` and ``action`` hold the
     ``jobs``, ``stages`` (skipped stages not counted) and ``shuffle_mb``
     of the Spark jobs each one ran, read from the status store by job
     group. The wall timers sit inside the job-group layers, so the
@@ -54,11 +56,13 @@ def time_entry(spark, spec, sf_dir: str) -> dict:
     from perfbench.probe import EngineCpu, Tracer
     from sports_data_integration_and_forecasting_pipeline_spark.operators.scoped import (
         release_caches,
+        round_notes,
     )
 
     cpu = EngineCpu(spark.sparkContext._jvm.ProcessHandle.current().pid())
     # A job group of its own per run, so no earlier run's jobs are counted.
     tracer = Tracer(spark, f"time_entry-{uuid.uuid4().hex}")
+    n0 = len(round_notes())
     c0 = cpu()
     with tracer.layer("fn"):
         t0 = time.perf_counter()
@@ -69,11 +73,13 @@ def time_entry(spark, spec, sf_dir: str) -> dict:
         df.write.format("noop").mode("overwrite").save()
         action_s = time.perf_counter() - t0
     cpu_s = cpu() - c0
+    rounds = sum(n for _, n, _ in round_notes()[n0:])
     release_caches()
     record = {
         "fn_s": round(fn_s, 3),
         "action_s": round(action_s, 3),
         "cpu_s": round(cpu_s, 3),
+        "rounds": rounds,
     }
     for layer in ("fn", "action"):
         tot = tracer.stage_totals(layer)

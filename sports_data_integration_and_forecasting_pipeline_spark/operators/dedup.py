@@ -37,14 +37,14 @@ from __future__ import annotations
 from functools import reduce
 from operator import add
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .parallelism import ensure_parallelism, exclusive_prefix_offsets
 
 # release_caches is re-exported for callers that drain dedup queries
-from .scoped import call_tag, checkpoint_scoped, persist_scoped, release_caches  # noqa: F401
+from .scoped import fixpoint, persist_scoped, release_caches  # noqa: F401
 
 NUM_MINHASH = 128  # production-grade signature: est_jaccard granularity 1/128
 MINHASH_BANDS = 16  # 16 bands x 8 rows -> collision prob (j^8 per band)
@@ -93,11 +93,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
         F.sequence(F.lit(1), count),
         lambda i: F.array_join(F.slice(toks, i, n), " "),
     )
-
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as array<string>."""
-    return F.array_distinct(shingles_from_tokens(F.split(text, " "), n))
 
 
 def exact_dup_groups(
@@ -611,17 +606,13 @@ def connected_components(
     (``label ← min(label, label(label))`` — sound because every label
     value is a node id of the same component), then joins the
     symmetrized edge list against the compressed labels and takes the
-    per-node min over neighbors and self, stopping when no label
-    changed. Compression doubles the effective reach per round, so
-    rounds needed = O(log diameter) instead of O(diameter) (r16:
-    measured 12 → 7 rounds on the sf0.1 simhash graph). ``max_iter``
-    bounds pathological chains: if the labels still change in the last
-    round, this raises ``RuntimeError`` rather than return a partial
-    labelling. Every round is one distributed join +
-    aggregate; ``localCheckpoint`` truncates the growing lineage so
-    round N doesn't replay rounds 1..N-1, and convergence is detected
-    by the monotone label-sum invariant, observed on the checkpoint job
-    itself (one job per round), never an old-vs-new join.
+    per-node min over neighbors and self. Compression doubles the
+    effective reach per round, so rounds needed = O(log diameter)
+    instead of O(diameter). The rounds run through ``scoped.fixpoint``
+    (a checkpoint per round, so round N doesn't replay rounds 1..N-1),
+    which stops when Σlabel, observed on the checkpoint job, is
+    unchanged; if the labels still change in round ``max_iter``, this
+    raises ``RuntimeError`` rather than return a partial labelling.
     """
     # Materialize the edge list ONCE before the loop (r15, found by the
     # full-battery sf1 sweep): `sym` feeds the neighbor join on EVERY
@@ -642,69 +633,49 @@ def connected_components(
         )
         .repartition("m"),
     )
-    # Convergence check without a join or an extra job: min-label
-    # propagation only ever DECREASES a node's label, so Σlabel is
-    # strictly monotone and Σ unchanged ⟺ no label changed. The sum is an
-    # observed metric of each round's checkpoint job (decimal
-    # accumulator: Σ over corpus-scale long ids must not wrap). Each
-    # round's checkpoint replaces its predecessor's under one per-call
-    # role: the new round is materialized, lineage cut, before the old
-    # one is freed.
-    role = f"cc_labels_{call_tag()}"
+    compress = False  # round 1's labels are still the identity map
 
-    def _checkpoint_with_sum(lb: DataFrame):
-        obs = Observation()
-        lb = checkpoint_scoped(
-            role,
-            lb.observe(
-                obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            ),
-        )
-        return lb, obs.get["s"]
-
-    labels, prev_sum = _checkpoint_with_sum(
-        nodes.select(
-            F.col(node_col).alias("n"),
-            F.col(node_col).cast("long").alias("label"),
-        )
-    )
-    for r in range(max_iter):
+    def _round(labels: DataFrame) -> DataFrame:
         # Path compression before each propagation (r16): label values
         # are node ids of the same component, so label(label(n)) is a
         # sound (and no larger) label — composing the label map with
         # itself doubles the effective reach per round, turning O(d)
         # propagation rounds into O(log d) (measured 12 → 7 rounds on
         # the sf0.1 simhash graph, whose diameter is ~11). The compose
-        # join runs over the FLAT checkpointed label table (cheap);
-        # round 1 skips it (labels are still the identity map). The
+        # join runs over the FLAT checkpointed label table (cheap). The
         # left join + coalesce keeps any label value that is not a
         # known node (cannot happen for edge endpoints ⊆ nodes, but a
         # degrade beats a dropped row).
-        if r > 0:
-            lmap = labels.select(
-                F.col("n").alias("__ln"), F.col("label").alias("__ll")
-            )
+        nonlocal compress
+        if compress:
+            lmap = labels.toDF("__ln", "__ll")
             labels = labels.join(
                 lmap, labels["label"] == lmap["__ln"], "left"
             ).select(
-                "n",
-                F.least(
-                    F.col("label"), F.coalesce("__ll", F.col("label"))
-                ).alias("label"),
+                "n", F.least("label", F.coalesce("__ll", "label")).alias("label")
             )
-        neighbor = (
-            sym.join(labels.withColumnRenamed("n", "m"), "m")
-            .select("n", "label")
-        )
-        labels, new_sum = _checkpoint_with_sum(
-            labels.unionByName(neighbor)
+        compress = True
+        neighbor = sym.join(labels.withColumnRenamed("n", "m"), "m")
+        return (
+            labels.unionByName(neighbor.select("n", "label"))
             .groupBy("n")
             .agg(F.min("label").alias("label"))
         )
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
+
+    # Min-label propagation only ever DECREASES a node's label, so Σlabel
+    # is strictly monotone and Σ unchanged ⟺ no label changed (decimal
+    # accumulator: Σ over corpus-scale long ids must not wrap).
+    labels, _, converged = fixpoint(
+        "connected_components",
+        nodes.select(
+            F.col(node_col).alias("n"),
+            F.col(node_col).cast("long").alias("label"),
+        ),
+        _round,
+        F.sum(F.col("label").cast("decimal(38,0)")),
+        max_iter,
+    )
+    if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
@@ -1760,9 +1731,9 @@ def near_dup_soft_weights(
     empty result, never an error.
 
     Scale shape: the pair join is banded (never all-pairs); CC runs
-    O(diameter) rounds of join+agg with ``localCheckpoint`` lineage
-    truncation (dedup clusters are small and dense, so diameter is
-    tiny); the final count is ONE window over the cluster-id shuffle —
+    O(log diameter) checkpointed rounds of join+agg (dedup clusters are
+    small and dense, so diameter is tiny); the final count is ONE window
+    over the cluster-id shuffle —
     no corpus-sized join beyond the labels themselves."""
     edges = simhash_pairs(
         df.select(id_col, text_col), max_hamming=max_hamming

@@ -12,12 +12,12 @@ integer cents).
 Scale shape per iteration: one hash join (ranks ⋈ edges on src — the
 edge/degree tables are scope-persisted and materialize once) and one
 map-side-combined aggregation on dst. Rank lineage is LINEAR in
-iterations (each round references its predecessor once), so the rounds
-compose lazily into the consumer's single action; a ``localCheckpoint``
-valve every 8 rounds bounds plan depth for long runs. Operators whose
-rounds SELF-compose (``tree_roots`` pointer doubling — 2^r lineage
-copies without truncation) keep a checkpoint per round instead. No
-driver-side data moves.
+iterations (each round references its predecessor once), so the few
+rounds callers run compose lazily into the consumer's single action.
+Operators whose rounds SELF-compose (``tree_roots`` pointer doubling —
+2^r lineage copies without truncation) iterate through
+``scoped.fixpoint`` instead, which checkpoints every round and stops
+when a round changes nothing. No driver-side data moves.
 """
 
 from __future__ import annotations
@@ -26,7 +26,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .scoped import call_tag, checkpoint_scoped, persist_scoped
+from .scoped import checkpoint_scoped, fixpoint, persist_scoped
+
+# 15 doublings reach depth 2^15, and one more confirms it. A local
+# checkpoint keeps its source plan's size estimate, and a self-join
+# multiplies the two sides' estimates, so each round squares it: past
+# about 20 rounds the optimizer's BigInt arithmetic alone takes minutes.
+_MAX_DOUBLINGS = 16
 
 
 def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -88,12 +94,10 @@ def pagerank_integer(
                 "by construction)."
             )
     base = (100 - damping_pct) * scale // 100
-    # each valve is materialized from its predecessor, which is then dead
-    valve = f"pagerank_valve_{call_tag()}"
     ranks = deg.select(
         F.col(src).alias("node"), F.lit(scale).cast("long").alias("pr")
     )
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = (
             e.join(deg, src)
             .join(ranks, F.col(src) == F.col("node"))
@@ -113,8 +117,6 @@ def pagerank_integer(
                 ).cast("long").alias("pr"),
             )
         )
-        if (i + 1) % 8 == 0 and (i + 1) < iterations:
-            ranks = checkpoint_scoped(valve, ranks)
     return ranks
 
 
@@ -167,7 +169,7 @@ def triangle_counts(edges_ab: DataFrame) -> DataFrame:
     reference. Per-node counts explode the triangle rows instead of a
     3-way union, which would replay the wedge join three times.
     """
-    edges = checkpoint_scoped(f"triangle_edges_{call_tag()}", edges_ab)
+    edges = checkpoint_scoped(edges_ab)
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = edges.select(F.col("a").alias("x"), F.col("b").alias("z"))
@@ -185,7 +187,6 @@ def tree_roots(
     parents: DataFrame,
     child: str = "child",
     parent: str = "parent",
-    max_doublings: int = 5,
 ) -> DataFrame:
     """Root and depth of every node in a forest, by pointer doubling —
     the distributed answer to ``WITH RECURSIVE`` ancestor walks.
@@ -194,50 +195,49 @@ def tree_roots(
     for roots. State rows ``(node, anc, depth)`` hold the farthest known
     ancestor and its exact distance; each round composes the state with
     itself (``state.anc ⋈ state.node``), DOUBLING the reach — a depth-D
-    forest converges in ⌈log₂D⌉ rounds, not D (a naive parent-at-a-time
-    walk would need D shuffles; at D=20 doubling needs 5). Roots map to
-    themselves at distance 0, making composition idempotent at the top —
-    no termination test per row, just a fixed round count with
-    ``localCheckpoint`` lineage truncation per round (the graph-family
-    house pattern). All arithmetic is exact integers.
+    forest converges in ⌈log₂D⌉ rounds, not D, and one more round
+    confirms it. Roots map to themselves at distance 0, making
+    composition idempotent at the top. The rounds run through
+    ``scoped.fixpoint`` with Σdepth as progress: a row's depth strictly
+    grows whenever its ancestor moves, so an unchanged sum means no row
+    changed. A walk still moving after ``_MAX_DOUBLINGS`` rounds (a
+    cycle, or a chain deeper than 2^15) raises ``RuntimeError`` rather
+    than return a partial walk. All arithmetic is exact integers.
 
     OPEN forests (a parent value that never appears as a node) are
     legal: the composition is a LEFT join, and a dangling ancestor
     terminates its chain — the node reports that ancestor as its root
-    at the distance already accumulated. The r15 sf1 sweep caught the
-    previous inner-join composition silently DROPPING every node whose
-    chain exits the node set (sparse key universes do this; dense test
-    keys masked it) — row loss is never an acceptable degrade. Callers
+    at the distance already accumulated, never drops the row. Callers
     that need a walk through vertices absent from their base table must
     still materialize the closure (see hierarchy_root_depth's digit
     closure) — this operator walks the rows it is given.
 
     Returns ``(node, root, depth)``.
     """
-    role = f"tree_roots_{call_tag()}"
-    state = checkpoint_scoped(
-        role,
+
+    def _double(state: DataFrame) -> DataFrame:
+        jump = state.toDF("j_node", "j_anc", "j_depth")
+        return state.join(jump, F.col("anc") == F.col("j_node"), "left").select(
+            "node",
+            F.coalesce("j_anc", "anc").alias("anc"),
+            (F.col("depth") + F.coalesce("j_depth", F.lit(0))).alias("depth"),
+        )
+
+    state, _, converged = fixpoint(
+        "tree_roots",
         parents.select(
             F.col(child).alias("node"),
             F.coalesce(F.col(parent), F.col(child)).alias("anc"),
             F.when(F.col(parent).isNull(), 0).otherwise(1).alias("depth"),
         ),
+        _double,
+        F.sum(F.col("depth").cast("decimal(38,0)")),
+        _MAX_DOUBLINGS,
     )
-    for _ in range(max_doublings):
-        jump = state.select(
-            F.col("node").alias("j_node"),
-            F.col("anc").alias("j_anc"),
-            F.col("depth").alias("j_depth"),
-        )
-        state = checkpoint_scoped(
-            role,
-            state.join(jump, F.col("anc") == F.col("j_node"), "left").select(
-                "node",
-                F.coalesce(F.col("j_anc"), F.col("anc")).alias("anc"),
-                (
-                    F.col("depth") + F.coalesce(F.col("j_depth"), F.lit(0))
-                ).alias("depth"),
-            ),
+    if not converged:
+        raise RuntimeError(
+            f"tree_roots did not converge in {_MAX_DOUBLINGS} doublings: "
+            "the parents table has a cycle or a chain deeper than 2^15"
         )
     return state.select(
         "node",

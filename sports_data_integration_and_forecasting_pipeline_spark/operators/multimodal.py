@@ -24,7 +24,7 @@ in those paths at all.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Iterable, Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame

@@ -2,25 +2,28 @@
 operators and battery plans make, keyed by (SparkSession id, role) so one
 session never frees a frame behind another session's pending result.
 
-Re-registering a role frees its previous holder; ``release_caches()`` frees
-everything, and bench, probe and the oracle sweep call it after every
-entry. A local checkpoint's blocks are the only copy of its data: freeing
-one before its lazy consumer runs fails that consumer with
-``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. So a checkpoint role is re-registered
-only where the old holder is dead (a fixpoint round replacing its
-predecessor), and a caller whose results may be pending side by side takes
-a per-call role from ``call_tag()``.
+Re-registering a persist role frees its previous holder;
+``release_caches()`` frees everything, and bench, probe and the oracle
+sweep call it after every entry. A local checkpoint's blocks are the only
+copy of its data: freeing one before its lazy consumer runs fails that
+consumer with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. So a lone
+``checkpoint_scoped`` is held under a role of its own per call, and only
+``fixpoint`` replaces a checkpoint: each round's state frees its
+predecessor, which no pending result reads, once it is materialized.
 """
 
 from __future__ import annotations
 
 import itertools
 import threading
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 # (session id, role) -> (holder, is a local checkpoint)
 _HELD: dict[tuple[int, str], tuple[DataFrame, bool]] = {}
+# (operator, rounds, converged) per fixpoint call since the last release
+_ROUNDS: list[tuple[str, int, bool]] = []
 _LOCK = threading.Lock()
 call_tag = itertools.count().__next__  # a process-unique number per call
 
@@ -49,7 +52,7 @@ def persist_scoped(role: str, df: DataFrame) -> DataFrame:
     return df
 
 
-def checkpoint_scoped(role: str, df: DataFrame) -> DataFrame:
+def _checkpoint(role: str, df: DataFrame) -> DataFrame:
     """``df.localCheckpoint()`` held under ``role``; the previous holder is
     freed only after the new checkpoint is materialized."""
     out = df.localCheckpoint()
@@ -61,9 +64,56 @@ def checkpoint_scoped(role: str, df: DataFrame) -> DataFrame:
     return out
 
 
+def checkpoint_scoped(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint()``, held until ``release_caches()``."""
+    return _checkpoint(f"checkpoint_{call_tag()}", df)
+
+
+def fixpoint(
+    name: str,
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    progress: Column,
+    max_rounds: int,
+) -> tuple[DataFrame, int, bool]:
+    """Iterate ``state = step(state)`` until a round changes nothing.
+
+    The seed and each round are checkpointed under one per-call role, so
+    a round reads a flat table, and frees its predecessor once it is
+    materialized. The aggregate ``progress`` (unchanged only when no row
+    changed) is observed on each checkpoint job; the loop stops at the
+    first round whose progress equals the previous one, or after
+    ``max_rounds``. Returns ``(state, rounds, converged)`` and notes
+    ``(name, rounds, converged)`` for :func:`round_notes`.
+    """
+    role = f"{name}_{call_tag()}"
+
+    def materialize(df: DataFrame):
+        obs = Observation()
+        out = _checkpoint(role, df.observe(obs, progress.alias("progress")))
+        return out, obs.get["progress"]
+
+    state, prev = materialize(state)
+    rounds, converged = 0, False
+    while rounds < max_rounds and not converged:
+        rounds += 1
+        state, cur = materialize(step(state))
+        converged, prev = cur == prev, cur
+    with _LOCK:
+        _ROUNDS.append((name, rounds, converged))
+    return state, rounds, converged
+
+
+def round_notes() -> list[tuple[str, int, bool]]:
+    """The ``fixpoint`` notes since the last ``release_caches()``."""
+    with _LOCK:
+        return list(_ROUNDS)
+
+
 def release_caches() -> None:
-    """Free every persist and checkpoint the registry holds."""
+    """Free every persist and checkpoint held, and clear the round notes."""
     with _LOCK:
         for held in _HELD.values():
             _free(*held)
         _HELD.clear()
+        _ROUNDS.clear()

@@ -22,7 +22,7 @@ Three standard levers, each exposed as a reusable operator:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SALTS = 16

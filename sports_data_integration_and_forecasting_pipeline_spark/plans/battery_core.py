@@ -41,7 +41,6 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 # --- testdata schema self-check --------------------------------------------

@@ -11,13 +11,11 @@ from __future__ import annotations
 
 import dataclasses
 from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..operators.scoped import call_tag, checkpoint_scoped, persist_scoped
+from ..operators.scoped import checkpoint_scoped, persist_scoped
 
 from .battery_bpe_packing import _BPE_CTES, _BPE_ROUNDS, _QUALITY_KEPT_CTES
 from .battery_core import QUERIES, _r, _register, _sql_r, _t
@@ -804,7 +802,6 @@ def _register_curation_v6() -> None:
         # exchanges without it, ~30 with). Eager — it runs inside fn(),
         # which bench.py times with the action for every entry.
         surv = checkpoint_scoped(
-            f"v6_surv_{call_tag()}",
             g.join(dropped, "doc_id", "left_anti").select(
                 "doc_id",
                 "lang",

@@ -11,13 +11,11 @@ from __future__ import annotations
 
 import dataclasses
 from dataclasses import dataclass
-from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..operators.scoped import call_tag, checkpoint_scoped
+from ..operators.scoped import checkpoint_scoped
 
 from .battery_core import (
     QUERIES,
@@ -605,7 +603,7 @@ def embed_ivfpq_precoded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # floats). A committed per-SF index file would silently rot when
     # the driver regenerates testdata, so the entry builds it fresh.
     codes = ivfpq_index_codes(emb, IVF_CENTROIDS, PQ_CODEBOOKS)
-    enc = checkpoint_scoped(f"ivfpq_enc_{call_tag()}", codes)
+    enc = checkpoint_scoped(codes)
     return ivfpq_topk_precoded(
         enc,
         emb.filter(F.col("vec_id") < 10),

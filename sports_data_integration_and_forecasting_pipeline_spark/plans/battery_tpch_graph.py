@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import dataclasses
 from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1031,7 +1030,8 @@ def purchase_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (operators/graph.py:tree_roots): each round composes the
 # ancestor-distance state with itself, so a depth-D hierarchy converges
 # in ⌈log₂D⌉ shuffles, not D — at a 100 TB dimension with depth 20
-# that's 5 rounds instead of 20. The decimal-digit parent function
+# that's 5 rounds instead of 20, plus one that finds nothing moved (at
+# sf0.1 the keys have ≤5 digits: 2 + 1). The decimal-digit parent function
 # (custkey DIV 10) is the deterministic hierarchy the testdata affords;
 # the operator itself takes any (child, parent) edge table.
 #
@@ -1088,7 +1088,7 @@ def hierarchy_root_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
             "parent"
         ),
     )
-    state = tree_roots(parents, max_doublings=5)
+    state = tree_roots(parents)
     # Emit one row per CUSTOMER (the oracle starts a walk per custkey);
     # intermediate closure vertices that are not custkeys drop here.
     # Both sides grow with SF — co-partitioned hash join, no broadcast.

@@ -11,13 +11,12 @@ from __future__ import annotations
 
 import dataclasses
 from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.scoped import call_tag, checkpoint_scoped, persist_scoped
+from ..operators.scoped import fixpoint, persist_scoped
 
 from .battery_core import (
     _PAIR_JOIN_MAX_PAIRS,
@@ -1025,11 +1024,11 @@ def kl_term_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # low-degree nodes until every survivor has ≥ k neighbors among the
 # survivors (the dense-community filter social/fraud pipelines run after
 # building a co-occurrence graph). This entry peels the 3-core of the
-# kNN-sparsified co-supply graph with FOUR unrolled rounds — a static
-# plan both engines express identically (the to-fixpoint variant is the
-# same loop with a convergence check + localCheckpoint, as in
-# dedup.connected_components; four rounds converge on this graph and
-# the oracle stays SQL-expressible). Scale shape per round: one
+# kNN-sparsified co-supply graph with at most FOUR rounds, the count the
+# oracle unrolls as static SQL. The engine runs them through
+# scoped.fixpoint with the edge count as progress, so it stops at the
+# first peel that removes nothing: every later peel is then a no-op, and
+# the result equals the four-peel one. Scale shape per round: one
 # map-side-combined degree aggregate + two semi-joins against the ≤|V|
 # survivor set — no pair enumeration beyond the already-capped kNN edge
 # list (degree ≤ 2k by construction, so each peel is linear in edges).
@@ -1042,7 +1041,7 @@ def kl_term_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # kNN window at sf1, which blew past a 20 GB memory limit into a >76 GB
 # temp spill and a disk-full abort in the r15 full-battery sf1 sweep.
 # Materialization pins single execution per stage (the exact analogue of
-# the engine's per-round localCheckpoint); results are unchanged.
+# the engine's per-round checkpoint); results are unchanged.
 _KCORE_EDGE_CTES = """
     os AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
     w AS (SELECT a.l_suppkey AS s1, b.l_suppkey AS s2,
@@ -1112,31 +1111,32 @@ def kcore_cosupply_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # knn_sparsify already folds to distinct undirected (a, b) with a < b
     und = knn_sparsify(weighted, k=5)
-    # Each peel references sym TWICE (degree agg + the semi-joins), so
-    # without truncation round r's lineage holds 2^r copies of the
-    # co-supply pair join; a checkpoint per round (as in
-    # dedup.connected_components) keeps every round's input a flat
-    # ≤|kept-edges| table instead, each replacing its predecessor.
-    role = f"kcore_sym_{call_tag()}"
-    sym = checkpoint_scoped(
-        role,
-        und.select(F.col("a").alias("s"), F.col("b").alias("t")).unionByName(
-            und.select(F.col("b").alias("s"), F.col("a").alias("t"))
-        ),
-    )
-    for _ in range(4):
+
+    def _peel(sym: DataFrame) -> DataFrame:
         keep = (
             sym.groupBy("s")
             .agg(F.count("*").alias("d"))
             .filter(F.col("d") >= 3)
             .select("s")
         )
-        sym = checkpoint_scoped(
-            role,
-            sym.join(keep, "s", "left_semi").join(
-                keep.withColumnRenamed("s", "t"), "t", "left_semi"
-            ),
+        return sym.join(keep, "s", "left_semi").join(
+            keep.withColumnRenamed("s", "t"), "t", "left_semi"
         )
+
+    # Each peel references sym TWICE (degree agg + the semi-joins), so
+    # without truncation round r's lineage would hold 2^r copies of the
+    # co-supply pair join; fixpoint checkpoints every round into a flat
+    # ≤|kept-edges| table. A peel only removes edges, so an unchanged
+    # edge count means it removed nothing.
+    sym, _, _ = fixpoint(
+        "kcore_cosupply_peel",
+        und.select(F.col("a").alias("s"), F.col("b").alias("t")).unionByName(
+            und.select(F.col("b").alias("s"), F.col("a").alias("t"))
+        ),
+        _peel,
+        F.count(F.lit(1)),
+        4,
+    )
     return sym.groupBy("s").agg(
         F.count("*").cast("bigint").alias("core_degree")
     ).withColumnRenamed("s", "node")

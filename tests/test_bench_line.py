@@ -168,3 +168,27 @@ def test_queries_fn_rides_the_full_line_only():
         "queries_omitted_sec",
     }
     assert compact == compact_bench_line(BASE, timings)
+
+
+def test_time_entry_records_kcore_stopping_at_the_first_empty_peel(spark):
+    """At sf0.001 the first 3-core peel removes nothing, so k-core runs
+    one round instead of its four-peel cap."""
+    from bench import time_entry
+    from sports_data_integration_and_forecasting_pipeline_spark.plans.battery import QUERIES
+
+    from .conftest import TESTDATA_SMOKE
+
+    record = time_entry(spark, QUERIES["kcore_cosupply_peel"], TESTDATA_SMOKE)
+    assert record["rounds"] == 1
+
+
+def test_time_entry_records_the_same_cc_rounds_on_every_run(spark):
+    """Connected components' round count depends on its input only."""
+    from bench import time_entry
+    from sports_data_integration_and_forecasting_pipeline_spark.plans.battery import QUERIES
+
+    from .conftest import TESTDATA_SMOKE
+
+    spec = QUERIES["dedup_cluster_assign"]
+    rounds = [time_entry(spark, spec, TESTDATA_SMOKE)["rounds"] for _ in range(3)]
+    assert rounds[0] >= 1 and len(set(rounds)) == 1, rounds

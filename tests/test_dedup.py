@@ -231,18 +231,53 @@ def test_connected_components_hand_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 7: 1, 4: 4, 5: 4, 6: 6, 8: 8}
 
 
-def test_star_cc_converges_fast_on_a_long_chain(spark):
+def test_connected_components_compresses_a_64_chain_in_7_rounds(spark):
     from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
         connected_components,
+    )
+    from sports_data_integration_and_forecasting_pipeline_spark.operators.scoped import (
+        round_notes,
     )
 
     n = 64
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"])
     # without path compression a 64-chain needs ~n rounds; with it,
-    # min-label propagation finishes in 7
+    # min-label propagation settles in 6 and the 7th changes nothing
     out = connected_components(chain, nodes, max_iter=8).collect()
     assert all(r["cluster_id"] == 0 for r in out) and len(out) == n
+    assert round_notes()[-1] == ("connected_components", 7, True)
+
+
+def test_connected_components_materializes_edge_list_once(spark, monkeypatch):
+    """Min-label propagation joins the symmetrized edge list on EVERY
+    round; an un-materialized edge list re-executes its entire upstream
+    pair-generation pipeline per round (~1 s at sf0.1, ~a minute PER
+    ROUND at sf1). Pin the contract, not the mechanism: the edge list
+    (columns n, m) is materialized exactly once, before the loop, under
+    the scoped-persist role ``cc_sym``."""
+    from sports_data_integration_and_forecasting_pipeline_spark.operators import dedup
+
+    persisted: list[tuple[str, tuple[str, ...]]] = []
+    orig = dedup.persist_scoped
+
+    def recording(role, df):
+        persisted.append((role, tuple(df.columns)))
+        return orig(role, df)
+
+    monkeypatch.setattr(dedup, "persist_scoped", recording)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    )
+    nodes = spark.createDataFrame(
+        [(i,) for i in (1, 2, 3, 10, 11, 99)], "doc_id long"
+    )
+    out = {
+        r.doc_id: r.cluster_id
+        for r in dedup.connected_components(edges, nodes).collect()
+    }
+    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
+    assert [c for r, c in persisted if r == "cc_sym"] == [("n", "m")], persisted
 
 
 def test_connected_components_raises_when_not_converged(spark):

@@ -135,7 +135,7 @@ def test_tree_roots_known_forest(spark):
 def test_tree_roots_doubling_covers_deep_chain(spark):
     from sports_data_integration_and_forecasting_pipeline_spark.operators.graph import tree_roots
 
-    # depth-12 chain: 5 doublings reach 2^5=32 >= 12
+    # depth-12 chain: 4 doublings reach 2^4=16 >= 12
     rows = [(1, None)] + [(i, i - 1) for i in range(2, 14)]
     parents = spark.createDataFrame(rows, "child long, parent long")
     got = dict(
@@ -144,6 +144,37 @@ def test_tree_roots_doubling_covers_deep_chain(spark):
     assert got[13] == 12 and got[1] == 0
     roots = {r["root"] for r in tree_roots(parents).collect()}
     assert roots == {1}
+
+
+def test_tree_roots_walks_a_chain_deeper_than_32(spark):
+    """The doubling runs until a round changes nothing, not a fixed
+    count: a 40-deep chain needs 6 doublings (2^6 = 64 >= 40), and five
+    would leave node 41 at ancestor 9, depth 32."""
+    from sports_data_integration_and_forecasting_pipeline_spark.operators.graph import tree_roots
+    from sports_data_integration_and_forecasting_pipeline_spark.operators.scoped import (
+        round_notes,
+    )
+
+    rows = [(1, None)] + [(i, i - 1) for i in range(2, 42)]
+    parents = spark.createDataFrame(rows, "child long, parent long")
+    got = {
+        (r["node"], r["root"], r["depth"])
+        for r in tree_roots(parents).collect()
+    }
+    assert got == {(i, 1, i - 1) for i in range(1, 42)}
+    assert round_notes()[-1] == ("tree_roots", 7, True)
+
+
+def test_tree_roots_raises_on_a_cycle(spark):
+    """A cyclic parents table has no roots: the walk never settles, and
+    that is an error, not a partial walk."""
+    import pytest
+
+    from sports_data_integration_and_forecasting_pipeline_spark.operators.graph import tree_roots
+
+    parents = spark.createDataFrame([(1, 2), (2, 1)], "child long, parent long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        tree_roots(parents)
 
 
 def test_tree_roots_open_forest_keeps_dangling_nodes(spark):
@@ -190,3 +221,16 @@ def test_hierarchy_root_depth_sparse_keys_match_oracle(spark, tmp_path):
     problems = compare(got, con.sql(spec.oracle).df())
     con.close()
     assert problems == [], problems
+
+
+# --- k-core peeling ---------------------------------------------------------
+
+
+def test_kcore_survivors_have_min_degree(spark):
+    from sports_data_integration_and_forecasting_pipeline_spark.plans.battery import QUERIES
+
+    from .conftest import TESTDATA_SMOKE
+
+    rows = QUERIES["kcore_cosupply_peel"].fn(spark, TESTDATA_SMOKE).collect()
+    # the defining 3-core property after the peels the entry runs
+    assert all(r["core_degree"] >= 3 for r in rows)

@@ -56,37 +56,6 @@ def test_novelty_e6_degrades_to_null_past_bound(spark):
     assert by_input[(b + 5, b - 1)] == 1_000_000 * (b - 1) // (b + 5)
 
 
-def test_connected_components_materializes_edge_list_once(spark, monkeypatch):
-    """Min-label propagation joins the symmetrized edge list on EVERY
-    round; an un-materialized edge list re-executes its entire upstream
-    pair-generation pipeline per round (~1 s at sf0.1, ~a minute PER
-    ROUND at sf1). Pin the contract, not the mechanism: the edge list
-    (columns n, m) is materialized exactly once, before the loop, under
-    the scoped-persist role ``cc_sym``."""
-    from sports_data_integration_and_forecasting_pipeline_spark.operators import dedup
-
-    persisted: list[tuple[str, tuple[str, ...]]] = []
-    orig = dedup.persist_scoped
-
-    def recording(role, df):
-        persisted.append((role, tuple(df.columns)))
-        return orig(role, df)
-
-    monkeypatch.setattr(dedup, "persist_scoped", recording)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 99)], "doc_id long"
-    )
-    out = {
-        r.doc_id: r.cluster_id
-        for r in dedup.connected_components(edges, nodes).collect()
-    }
-    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
-    assert [c for r, c in persisted if r == "cc_sym"] == [("n", "m")], persisted
-
-
 def test_oracle_mirrors_novelty_bound():
     """The ngram_novelty_audit oracle SQL must carry the SAME bound so
     Spark and DuckDB agree past it (r14 advice item 1). Checked two

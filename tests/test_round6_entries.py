@@ -75,9 +75,3 @@ def test_pit_lookup_no_row_explosion_and_no_future_state(spark):
     for r in rows:
         if r["state"] is not None:
             assert r["state_age_s"] >= 0
-
-
-def test_kcore_survivors_have_min_degree(spark):
-    rows = QUERIES["kcore_cosupply_peel"].fn(spark, TESTDATA_SMOKE).collect()
-    # the defining 3-core property after the peels the entry runs
-    assert all(r["core_degree"] >= 3 for r in rows)

@@ -9,14 +9,15 @@ Usage:
 Protocol per entry, the bench's own code path (``bench.py``):
   - ``--runs`` executions (default 5) through ``time_entry``: builder
     ``fn()`` then the noop-sink action, caches released after each run;
-    each run's measurement record is printed;
+    each run's measurement record is printed, its fixpoint ``rounds``
+    also as one list per entry;
   - run 1 (codegen/plan warm-up) is reported but excluded from the
     min/median/max bands, taken over fn+action (``seconds``) and over
     ``cpu_s``.
 
 Prints one JSON line:
   {"sf": ...,
-   "entries": {name: {"runs": [record, ...],
+   "entries": {name: {"runs": [record, ...], "rounds": [n, ...],
                       "seconds": {"warm": r1, "min": m, "median": md, "max": mx},
                       "cpu_s": {"warm": ..., "min": ..., "median": ..., "max": ...}}}}
 """
@@ -82,6 +83,7 @@ def main() -> None:
         runs = [time_entry(spark, spec, sf_dir) for _ in range(runs_n)]
         entries[name] = {
             "runs": runs,
+            "rounds": [r["rounds"] for r in runs],
             "seconds": band([seconds(r) for r in runs]),
             "cpu_s": band([r["cpu_s"] for r in runs]),
         }
